@@ -2,10 +2,10 @@
 
 The reference has no in-engine joins — its only join-shaped logic is a
 Python-set anti-join of candidate files vs the processed ledger
-(/root/reference/airflow/dags/drive_auto_compress_email.py:184, :207).
-Here that becomes a broadcast ``left_anti`` join, and the engine exposes
-the full join surface through ``df.join`` so Catalyst/AQE pick
-broadcast vs shuffled-hash vs sort-merge at runtime.
+(/root/reference/airflow/dags/drive_auto_compress_email.py:184, :207),
+which stays a driver-side set difference (streaming/file_source.py).
+The engine exposes the full join surface through ``df.join`` so
+Catalyst/AQE pick broadcast vs shuffled-hash vs sort-merge at runtime.
 
 Scale notes: dimension tables (region/nation/supplier/part at typical
 ratios) are broadcast explicitly; fact-fact joins shuffle on the join
@@ -16,14 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def ledger_anti_join(
-    candidates: DataFrame, ledger: DataFrame, key: str = "file_id"
-) -> DataFrame:
-    """F3/J1: keep candidates whose key is NOT in the ledger. The ledger
-    is tiny → broadcast, so no shuffle of the candidate side."""
-    return candidates.join(F.broadcast(ledger), on=key, how="left_anti")
 
 
 def semi_join(left: DataFrame, right: DataFrame, on, broadcast: bool = False) -> DataFrame:

@@ -27,6 +27,10 @@ Design:
 Semantics notes vs the engine's single-plan form
 (plans/drive_pipeline.run_drive_pipeline, equivalence-tested):
 
+- Task 1 uses the single-plan tick's screen (drive_pipeline.screen):
+  the settled listing minus the ledger, a driver-side set difference,
+  so a poll with nothing new launches no Spark job. Its ledger commit
+  is the same atomic file replace (file_source.update_ledger).
 - The single-plan form updates the processed-file ledger only after
   the whole tick succeeds (strictest replay safety). The three-task
   split necessarily commits the ledger at the end of task 1 — the
@@ -40,7 +44,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 from pyspark.sql import SparkSession
 
@@ -61,62 +64,37 @@ def poll_and_process_drive_files(
     min_age_s: float = 0.0,
     now: float | None = None,
 ) -> list[dict]:
-    """Task 1 (reference :567 ``poll_and_process_drive_files``): list
-    the watched folder through the Drive-shaped source, screen by
-    settle age + processed ledger, compress fresh files on the
-    executors, commit the ledger, and land the compression summary
-    under ``work_dir`` for the downstream tasks."""
-    from pyspark.sql import functions as F
-
+    """Task 1 (reference :567 ``poll_and_process_drive_files``): screen
+    the watched folder by settle age + processed ledger on the driver
+    (the single-plan tick's screen), compress fresh files on the
+    executors, land the compression summary under ``work_dir`` for the
+    downstream tasks, and commit the ledger."""
     from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
-        _register_listing,
-        compress_new_files,
-    )
-    from airflow_loan_etl_pipeline_spark.plans.report import (
-        compression_summary,
+        compress_fresh,
+        screen,
     )
     from airflow_loan_etl_pipeline_spark.streaming.file_source import (
         load_ledger,
-        new_files,
         update_ledger,
     )
 
-    _register_listing(spark)
     paths = _work_paths(work_dir)
     ledger_path = os.path.join(work_dir, "ledger")
-    now = time.time() if now is None else now
-
-    listing = (
-        spark.read.format("file_listing")
-        .option("path", watch_dir)
-        .option("prefix", prefix)
-        .option("mime", "text/csv")
-        .option("with_content", "true")
-        .load()
-    )
-    settled = listing.filter(F.lit(now) - F.col("modified") >= min_age_s)
-    cand = settled.withColumn("file_id", F.col("name"))
-    fresh = new_files(cand, load_ledger(spark, ledger_path))
-    fresh = fresh.localCheckpoint()  # pin the decision pre-mutation
+    fresh = screen(watch_dir, load_ledger(ledger_path), prefix, min_age_s, now)
     os.makedirs(os.path.dirname(paths["summaries"]), exist_ok=True)
-    if not fresh.take(1):
+    if not fresh:
         with open(paths["summaries"], "w", encoding="utf-8") as f:
             json.dump([], f)
         return []
 
-    summaries = [
-        r.asDict()
-        for r in compression_summary(
-            compress_new_files(fresh, os.path.join(work_dir, "compressed"))
-        ).collect()
-    ]
+    summaries, processed = compress_fresh(spark, fresh, work_dir)
     # land the handoff BEFORE committing the ledger: a crash between
     # the two then re-processes the files on retry (commit-last replay
     # safety, same ordering as run_drive_pipeline) — the reverse order
     # would permanently drop this tick's files from the report
     with open(paths["summaries"], "w", encoding="utf-8") as f:
         json.dump(summaries, f)
-    update_ledger(spark, ledger_path, fresh.select("file_id"))
+    update_ledger(spark, ledger_path, processed)
     return summaries
 
 
@@ -126,37 +104,24 @@ def run_spark_etl(
     work_dir: str,
 ) -> int:
     """Task 2 (reference :573 ``run_spark_etl``): the loan ETL over
-    the cumulative LEDGERED file set (never a raw watch-dir glob —
-    that would ingest unsettled/mid-copy files task 1 just excluded),
-    aggregates written under ``work_dir``. Returns the aggregate row
-    count. Idempotent: overwrite, so a task retry re-lands the same
-    frame."""
-    from airflow_loan_etl_pipeline_spark import schemas
-    from airflow_loan_etl_pipeline_spark.plans.loan_etl import (
-        clean_and_aggregate,
+    the LEDGERED files still in the folder (never a raw watch-dir glob
+    — that would ingest unsettled/mid-copy files task 1 just
+    excluded), aggregates written under ``work_dir``. Returns the
+    aggregate row count. Idempotent: overwrite, so a task retry
+    re-lands the same frame."""
+    from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
+        aggregate_present,
     )
-    from airflow_loan_etl_pipeline_spark.sources.io import read_csv_dir
     from airflow_loan_etl_pipeline_spark.streaming.file_source import (
         load_ledger,
     )
 
     paths = _work_paths(work_dir)
-    ledger_path = os.path.join(work_dir, "ledger")
-    names = sorted(
-        r["file_id"] for r in load_ledger(spark, ledger_path).collect()
+    aggs = aggregate_present(
+        spark, watch_dir, load_ledger(os.path.join(work_dir, "ledger"))
     )
-    if not names:
+    if aggs is None:
         return 0
-    loans = read_csv_dir(
-        spark, [os.path.join(watch_dir, n) for n in names],
-        schema=schemas.LOAN,
-    )
-    _cleaned, aggs = clean_and_aggregate(
-        loans,
-        group_cols=["status", "product_type", "branch"],
-        amount_col="amount",
-        date_col="created_at",
-    )
     aggs.write.mode("overwrite").parquet(paths["aggregates"])
     return spark.read.parquet(paths["aggregates"]).count()
 

@@ -1,28 +1,26 @@
 """The reference's WHOLE DAG as one engine plan.
 
 Mirrors drive_auto_compress_email.py:588-602 (`poll_and_process >>
-run_spark >> send_email_summary`) end to end: poll the watched folder
-through the Drive-shaped DataSource (prefix/MIME pushdown at
-planning), settle-age + processed-ledger screening, per-file gzip
-compression WITH the original/compressed size metrics computed on the
-executors (Arrow-batched — the reference round-trips every byte
-through the driver, :268-306), the loan ETL over the cumulative
-landing glob, and the HTML summary report (optionally delivered over
-SMTP). A rerun with no new files is a no-op before any data work —
-the cron-idempotency the reference gets from its processed-ids JSON
-(:85-117), here a parquet ledger anti-join.
+run_spark >> send_email_summary`) end to end: poll the watched folder,
+settle-age + processed-ledger screening, per-file gzip compression
+WITH the original/compressed size metrics computed on the executors
+(Arrow-batched — the reference round-trips every byte through the
+driver, :268-306), the loan ETL over the cumulative file set, and the
+HTML summary report (optionally delivered over SMTP).
 
-Differences by design (same inversions as the rest of the engine):
-no landing copy (executors read the source files directly), no
-driver-side byte shuttling, the ledger update happens only after the
-decision frames are pinned (localCheckpoint) so a replay cannot
-self-collide.
+The screen is the reference's own Python set difference (:85-117,
+:184, :207) on the driver: settled listing minus ledger. A tick with
+nothing new returns before any Spark call; only fresh files reach the
+executors. The ledger commit is the tick's last step, one atomic file
+replace (file_source.update_ledger): a crash before it replays the
+whole tick, a crash after it replays nothing. The ETL reads the
+ledgered files still in the folder plus the fresh ones, so a deleted
+source file drops out of the totals instead of failing later ticks.
 """
 
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,27 +38,32 @@ from airflow_loan_etl_pipeline_spark.plans.report import (
 from airflow_loan_etl_pipeline_spark.sources.io import read_csv_dir
 from airflow_loan_etl_pipeline_spark.streaming.file_source import (
     load_ledger,
-    new_files,
+    settled_files,
     update_ledger,
 )
 
 
-def _register_listing(spark: SparkSession) -> None:
-    from airflow_loan_etl_pipeline_spark.sources.drive_source import (
-        FileListingDataSource,
-    )
-
-    # re-registering the same source is a no-op overwrite (verified on
-    # Spark 4) — a real registration failure must surface, not be
-    # swallowed here and resurface as an opaque "source not found"
-    spark.dataSource.register(FileListingDataSource)
+def screen(
+    watch_dir: str,
+    ledger: set[str],
+    prefix: str,
+    min_age_s: float,
+    now: float | None = None,
+) -> list[tuple[str, str]]:
+    """``(name, path)`` of the settled files not yet in ``ledger``."""
+    return [
+        (name, path)
+        for name, path, _mtime in settled_files(watch_dir, prefix, min_age_s, now)
+        if name not in ledger
+    ]
 
 
 def compress_new_files(fresh: DataFrame, out_dir: str) -> DataFrame:
-    """Executor-side gzip of each new file's payload + size metrics:
-    one Arrow batch pass over (name, content), no driver byte
-    shuttling. ``out_dir`` must be a path every executor can write
-    (shared FS / object-store mount at cluster scale)."""
+    """Executor-side gzip of each new file + size metrics: one Arrow
+    batch pass over (name, path) that reads each file's bytes where it
+    runs, no driver byte shuttling. ``out_dir`` must be a path every
+    executor can write (shared FS / object-store mount at cluster
+    scale)."""
     import pandas as pd
 
     def op(batches):
@@ -69,8 +72,9 @@ def compress_new_files(fresh: DataFrame, out_dir: str) -> DataFrame:
         os.makedirs(out_dir, exist_ok=True)
         for pdf in batches:
             names, osz, csz, paths = [], [], [], []
-            for name, content in zip(pdf["name"], pdf["content"]):
-                blob = bytes(content)
+            for name, path in zip(pdf["name"], pdf["path"]):
+                with open(path, "rb") as f:
+                    blob = f.read()
                 gz = gzip.compress(blob)
                 out_path = os.path.join(out_dir, name + ".gz")
                 with open(out_path, "wb") as f:
@@ -88,11 +92,46 @@ def compress_new_files(fresh: DataFrame, out_dir: str) -> DataFrame:
                 }
             )
 
-    return fresh.select("name", "content").mapInPandas(
+    return fresh.select("name", "path").mapInPandas(
         op,
         schema="filename string, original_size bigint, "
         "compressed_size bigint, compressed_path string",
     )
+
+
+def compress_fresh(
+    spark: SparkSession, fresh: list[tuple[str, str]], work_dir: str
+) -> tuple[list[dict], DataFrame]:
+    """Gzip the fresh files under ``work_dir/compressed``. Returns the
+    collected compression summaries and the ``file_id`` frame to
+    commit to the ledger."""
+    files = spark.createDataFrame(fresh, "name string, path string")
+    summaries = compression_summary(
+        compress_new_files(files, os.path.join(work_dir, "compressed"))
+    )
+    return (
+        [r.asDict() for r in summaries.collect()],
+        files.select(F.col("name").alias("file_id")),
+    )
+
+
+def aggregate_present(
+    spark: SparkSession, watch_dir: str, names: set[str]
+) -> DataFrame | None:
+    """Loan aggregates over the named files still in ``watch_dir``
+    (None when none is)."""
+    paths = [os.path.join(watch_dir, n) for n in sorted(names)]
+    paths = [p for p in paths if os.path.isfile(p)]
+    if not paths:
+        return None
+    loans = read_csv_dir(spark, paths, schema=schemas.LOAN)
+    _cleaned, aggs = clean_and_aggregate(
+        loans,
+        group_cols=["status", "product_type", "branch"],
+        amount_col="amount",
+        date_col="created_at",
+    )
+    return aggs
 
 
 def run_drive_pipeline(
@@ -108,50 +147,20 @@ def run_drive_pipeline(
     ``(file_summaries, aggregates_df, html)`` — empty/None/None when
     no new files were eligible (the reference's early return,
     drive_auto_compress_email.py:240-242)."""
-    _register_listing(spark)
     ledger_path = os.path.join(work_dir, "ledger")
-    now = time.time() if now is None else now
-
-    listing = (
-        spark.read.format("file_listing")
-        .option("path", watch_dir)
-        .option("prefix", prefix)
-        .option("mime", "text/csv")
-        .option("with_content", "true")
-        .load()
-    )
-    settled = listing.filter(F.lit(now) - F.col("modified") >= min_age_s)
-    cand = settled.withColumn("file_id", F.col("name"))
-    fresh = new_files(cand, load_ledger(spark, ledger_path))
-    # pin the decision before any ledger mutation (replay safety)
-    fresh = fresh.localCheckpoint()
-    if not fresh.take(1):
+    ledger = load_ledger(ledger_path)
+    fresh = screen(watch_dir, ledger, prefix, min_age_s, now)
+    if not fresh:
         return [], None, None
 
-    summaries_df = compression_summary(
-        compress_new_files(fresh, os.path.join(work_dir, "compressed"))
-    ).localCheckpoint()
-
-    # ETL input = exactly the SCREENED cumulative set (previously
-    # ledgered files + this tick's fresh ones) — a raw watch-dir glob
+    file_summaries, processed = compress_fresh(spark, fresh, work_dir)
+    # ETL input = the SCREENED cumulative set — a raw watch-dir glob
     # would ingest unsettled/mid-copy files the screen just excluded
-    processed_names = {
-        r["file_id"] for r in load_ledger(spark, ledger_path).collect()
-    } | {r["file_id"] for r in fresh.select("file_id").collect()}
-    loan_paths = [os.path.join(watch_dir, n) for n in sorted(processed_names)]
-    loans = read_csv_dir(spark, loan_paths, schema=schemas.LOAN)
-    _cleaned, aggs = clean_and_aggregate(
-        loans,
-        group_cols=["status", "product_type", "branch"],
-        amount_col="amount",
-        date_col="created_at",
-    )
-
-    file_summaries = [r.asDict() for r in summaries_df.collect()]
+    aggs = aggregate_present(spark, watch_dir, ledger | {n for n, _p in fresh})
     top = latest_aggregates_summary(aggs, limit=10)
     html = render_html_report(file_summaries, top)
     if smtp:
         send_html_report(html, **smtp)
 
-    update_ledger(spark, ledger_path, fresh.select("file_id"))
+    update_ledger(spark, ledger_path, processed)
     return file_summaries, aggs, html

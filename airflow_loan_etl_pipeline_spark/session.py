@@ -33,6 +33,16 @@ logger = logging.getLogger(__name__)
 _DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def _default_driver_memory() -> str:
+    """Half of host memory, at most 48g (48g without /proc/meminfo)."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = int(f.readline().split()[1])  # MemTotal
+    except OSError:
+        return "48g"
+    return f"{min(48 * 1024, total_kb // 2048)}m"
+
+
 def get_spark(
     app_name: str = "airflow_loan_etl_pipeline_spark",
     master: str | None = None,
@@ -72,7 +82,10 @@ def get_spark(
         # pointer-jumping round leaks a checkpoint directory on
         # durable storage for the life of the application.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Scan-split size, env-tunable. The fixtures are single ~20 MB

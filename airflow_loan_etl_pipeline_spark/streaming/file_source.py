@@ -11,29 +11,28 @@ Streaming's file source, so the idiomatic rebuild is:
   checkpointed seen-files log IS the ledger (ST2); `Trigger.AvailableNow`
   IS the cron poll that drains everything then stops (ST1);
   `maxFileAge` / modifiedAfter options handle the settle window (ST3).
-- **Batch-incremental mode** (`incremental_batch`): for engines that
-  poll with plain batch jobs, a parquet ledger table + broadcast
-  left_anti join reproduces exactly-once file semantics (F3/J1), and a
-  mod-time predicate reproduces the settle window (F4).
+- **Batch-incremental mode** (`incremental_batch`, and the drive tick
+  in plans/drive_pipeline.py): the screen is the reference's own
+  Python set difference — settled listing (F2/F4, :227-236) minus a
+  small ledger of processed ids (F3, :184, :207) — run on the driver
+  with no Spark job. The ledger is one parquet file replaced
+  atomically (`update_ledger`), committed only after the batch's
+  sinks succeed, so every file lands in exactly one committed batch.
 """
 
 from __future__ import annotations
 
 import os
 import time
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from airflow_loan_etl_pipeline_spark.operators.joins import ledger_anti_join
-
-LEDGER_SCHEMA = T.StructType(
-    [
-        T.StructField("file_id", T.StringType()),
-        T.StructField("processed_at", T.TimestampType()),
-    ]
-)
+from airflow_loan_etl_pipeline_spark.sources.drive_source import _mime_of
 
 
 def stream_csv_dir(
@@ -52,67 +51,69 @@ def stream_csv_dir(
 
 
 def settled_files(
-    spark: SparkSession,
     input_dir: str,
-    suffix: str = ".csv",
     prefix: str = "",
     min_age_seconds: float = 60.0,
     now: float | None = None,
-) -> DataFrame:
-    """F2/F4: list landing files passing the name predicate and the
+    mime: str = "text/csv",
+) -> list[tuple[str, str, float]]:
+    """F2/F4: ``(file_id, path, mtime)`` of the regular files in
+    ``input_dir`` that pass the name-prefix and MIME predicates and the
     settle-age gate (reference MIN_FILE_AGE_SECONDS,
-    drive_auto_compress_email.py:71, :227-236). Listing is driver-side
-    (it's directory metadata, not data)."""
+    drive_auto_compress_email.py:71, :227-236), sorted by name. Plain
+    driver-side metadata: no Spark job."""
     now = time.time() if now is None else now
-    rows = []
+    out = []
     if os.path.isdir(input_dir):
         for name in sorted(os.listdir(input_dir)):
-            if not (name.startswith(prefix) and name.endswith(suffix)):
-                continue
-            full = os.path.join(input_dir, name)
-            mtime = os.path.getmtime(full)
-            if now - mtime >= min_age_seconds:
-                rows.append((name, full, float(mtime)))
-    return spark.createDataFrame(
-        rows, "file_id string, path string, mtime double"
-    )
+            path = os.path.join(input_dir, name)
+            if name.startswith(prefix) and _mime_of(name) == mime and os.path.isfile(path):
+                mtime = os.path.getmtime(path)
+                if now - mtime >= min_age_seconds:
+                    out.append((name, path, mtime))
+    return out
 
 
-def load_ledger(spark: SparkSession, ledger_path: str) -> DataFrame:
-    """ST2 ledger table (parquet). Empty frame when absent."""
-    if os.path.exists(ledger_path):
-        return spark.read.parquet(ledger_path)
-    return spark.createDataFrame([], LEDGER_SCHEMA)
-
-
-def new_files(candidates: DataFrame, ledger: DataFrame) -> DataFrame:
-    """F3/J1: anti-join candidates against the ledger (broadcast — the
-    ledger is file metadata, tiny relative to data)."""
-    return ledger_anti_join(candidates, ledger.select("file_id"), key="file_id")
+def load_ledger(ledger_path: str) -> set[str]:
+    """ST2: the processed file ids (empty when the ledger is absent).
+    A ``ledger.tmp`` left by a crashed :func:`update_ledger` is never
+    read: that update did not commit."""
+    if not os.path.exists(ledger_path):
+        return set()
+    return set(pq.read_table(ledger_path, columns=["file_id"])["file_id"].to_pylist())
 
 
 def update_ledger(
     spark: SparkSession, ledger_path: str, processed: DataFrame
 ) -> None:
-    """Merge newly processed file ids into the ledger (idempotent)."""
-    existing = load_ledger(spark, ledger_path)
-    merged = (
-        existing.select("file_id")
-        .unionByName(processed.select("file_id"))
-        .distinct()
-        .withColumn("processed_at", F.current_timestamp())
+    """Commit the ``file_id`` column of ``processed`` to the ledger
+    (idempotent). The ledger is ONE parquet file (``file_id``,
+    ``processed_at``) replaced atomically: the merged set is written
+    to ``ledger.tmp``, fsynced, ``os.replace``d onto ``ledger`` and the
+    directory fsynced, so a crash at any point leaves either the old
+    ledger or the new one, never neither."""
+    ids = load_ledger(ledger_path)
+    ids |= {r["file_id"] for r in processed.select("file_id").collect()}
+    stamp = datetime.now(timezone.utc)
+    table = pa.table(
+        {
+            "file_id": pa.array(sorted(ids), pa.string()),
+            "processed_at": pa.array([stamp] * len(ids), pa.timestamp("us", tz="UTC")),
+        }
     )
-    # Two-phase write: parquet overwrite of the path we are reading from
-    # would clobber the source mid-scan. The tmp copy is deleted after
-    # the final write lands — a crash in between leaves the previous
-    # ledger intact plus a stale .tmp the next update overwrites.
-    import shutil
-
+    ledger_dir = os.path.dirname(os.path.abspath(ledger_path))
+    os.makedirs(ledger_dir, exist_ok=True)
     tmp = ledger_path + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    final = spark.read.parquet(tmp)
-    final.write.mode("overwrite").parquet(ledger_path)
-    shutil.rmtree(tmp, ignore_errors=True)
+    with open(tmp, "wb") as f:
+        pq.write_table(table, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, ledger_path)
+    fd = os.open(ledger_dir, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def incremental_batch(
@@ -132,18 +133,21 @@ def incremental_batch(
     (process first, persist ledger last,
     drive_auto_compress_email.py:312, :336).
     """
-    cands = settled_files(
-        spark, input_dir, prefix=prefix, min_age_seconds=min_age_seconds
+    ledger = load_ledger(ledger_path)
+    fresh = [
+        f
+        for f in settled_files(input_dir, prefix, min_age_seconds)
+        if f[0] not in ledger
+    ]
+    processed = spark.createDataFrame(
+        fresh, "file_id string, path string, mtime double"
     )
-    ledger = load_ledger(spark, ledger_path)
-    fresh = new_files(cands, ledger)
-    paths = [r["path"] for r in fresh.select("path").collect()]
-    if not paths:
-        return None, fresh
+    if not fresh:
+        return None, processed
     data = (
         spark.read.schema(schema)
         .option("header", True)
-        .csv(paths)
+        .csv([path for _id, path, _mtime in fresh])
         .withColumn("_source_file", F.input_file_name())
     )
-    return data, fresh
+    return data, processed

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from airflow_loan_etl_pipeline_spark import schemas
 from airflow_loan_etl_pipeline_spark.plans.loan_etl import (
     clean_and_aggregate,
@@ -33,6 +35,18 @@ FILE_B = [
     "LN5,CU2,2024-03-05 16:20:00,5000.0,,60,ACTIVE,AUTO,South,POOR",
     "LN6,CU4,,6000.0,8.0,12,ACTIVE,PERSONAL,,EXCELLENT",
 ]
+FILE_C = [
+    "LN7,CU5,2024-03-06 08:00:00,7000.0,6.5,24,CLOSED,HOME,East,GOOD",
+    "LN8,CU5,2024-03-06 09:00:00,,6.5,24,ACTIVE,HOME,East,",
+    "LN9,CU6,2024-03-07 12:00:00,900.0,9.0,6,ACTIVE,PERSONAL,North,FAIR",
+]
+FILE_D = [
+    "LN10,CU7,2024-03-08 13:00:00,3000.0,5.0,12,CLOSED,AUTO,South,GOOD",
+]
+
+
+def _write_loans(path, rows: list[str]) -> None:
+    path.write_text(HEADER + "\n" + "\n".join(rows) + "\n")
 
 
 def _land(tmp_path) -> str:
@@ -458,13 +472,164 @@ def test_airflow_dag_task_bodies_equivalent_to_single_plan(spark, tmp_path):
     assert ad.run_spark_etl(spark, str(watch), work_t) == n
 
 
+def _ledger_rows(ledger_path: str) -> list[str]:
+    import pyarrow.parquet as pq
+
+    if not os.path.exists(ledger_path):
+        return []
+    return pq.read_table(ledger_path, columns=["file_id"])["file_id"].to_pylist()
+
+
+def test_drive_tick_survives_deleted_ledgered_file(spark, tmp_path):
+    """A ledgered source file deleted between ticks drops out of the
+    totals: the next tick still succeeds, gzips only the new file, and
+    aggregates exactly the files still present (re-reading every
+    ledgered name failed each later tick with PATH_NOT_FOUND)."""
+    from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
+        run_drive_pipeline,
+    )
+
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    work = str(tmp_path / "work")
+    _write_loans(watch / "loan_a.csv", FILE_A)
+    _write_loans(watch / "loan_b.csv", FILE_B)
+    run_drive_pipeline(spark, str(watch), work)
+    gz_dir = os.path.join(work, "compressed")
+    gz_before = {n: os.stat(os.path.join(gz_dir, n)).st_mtime_ns
+                 for n in os.listdir(gz_dir)}
+
+    (watch / "loan_a.csv").unlink()
+    _write_loans(watch / "loan_c.csv", FILE_C)
+    summaries, aggs, html = run_drive_pipeline(spark, str(watch), work)
+
+    assert [s["filename"] for s in summaries] == ["loan_c.csv"]
+    gz_after = {n: os.stat(os.path.join(gz_dir, n)).st_mtime_ns
+                for n in os.listdir(gz_dir)}
+    assert set(gz_after) - set(gz_before) == {"loan_c.csv.gz"}
+    assert all(gz_after[n] == t for n, t in gz_before.items())
+    assert sum(r["loan_count"] for r in aggs.collect()) == len(FILE_B) + len(FILE_C)
+    assert "loan_c.csv" in html
+    # the deleted file stays processed: re-landing it is not new work
+    assert set(_ledger_rows(os.path.join(work, "ledger"))) == {
+        "loan_a.csv", "loan_b.csv", "loan_c.csv",
+    }
+
+
+def _inject_crash(monkeypatch, point: str, ledger_path: str) -> None:
+    """Raise inside the next tick at ``point``: after the gzip pass but
+    before the report, after ``ledger.tmp`` is written but before it
+    replaces the ledger, or right after the replace."""
+    from airflow_loan_etl_pipeline_spark.plans import drive_pipeline
+
+    def crash(*_args, **_kwargs):
+        raise RuntimeError("injected crash")
+
+    if point == "after_gzip":
+        monkeypatch.setattr(drive_pipeline, "render_html_report", crash)
+        return
+    real_replace = os.replace
+
+    def replace(src, dst):
+        if dst != ledger_path:
+            return real_replace(src, dst)
+        assert os.path.exists(src)  # ledger.tmp is on disk
+        if point == "after_replace":
+            real_replace(src, dst)
+        crash()
+
+    monkeypatch.setattr(os, "replace", replace)
+
+
+@pytest.mark.parametrize("point", ["after_gzip", "before_replace", "after_replace"])
+def test_drive_tick_exactly_once_across_crashes(spark, tmp_path, monkeypatch, point):
+    """Fault injection: a tick that crashes at ``point`` and is then
+    re-run commits every file in exactly one tick, the ledger holds one
+    row per landed file, each successful tick reports exactly the files
+    it committed, and the final aggregates equal a crash-free run."""
+    from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
+        run_drive_pipeline,
+    )
+
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    work = str(tmp_path / "work")
+    ledger_path = os.path.join(work, "ledger")
+    committed, reported = [], []  # per tick attempt
+
+    def tick():
+        before = set(_ledger_rows(ledger_path))
+        try:
+            out = run_drive_pipeline(spark, str(watch), work)
+            reported.append({s["filename"] for s in out[0]})
+            return out
+        except RuntimeError:
+            reported.append(None)
+            raise
+        finally:
+            committed.append(set(_ledger_rows(ledger_path)) - before)
+
+    _write_loans(watch / "loan_a.csv", FILE_A)
+    _write_loans(watch / "loan_b.csv", FILE_B)
+    tick()
+    _write_loans(watch / "loan_c.csv", FILE_C)
+    with monkeypatch.context() as m:
+        _inject_crash(m, point, ledger_path)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            tick()
+    assert os.path.exists(os.path.join(work, "compressed", "loan_c.csv.gz"))
+    tick()  # the replay
+    _write_loans(watch / "loan_d.csv", FILE_D)
+    _s, aggs, _h = tick()
+
+    landed = ["loan_a.csv", "loan_b.csv", "loan_c.csv", "loan_d.csv"]
+    assert sorted(n for c in committed for n in c) == landed
+    assert committed[1] == ({"loan_c.csv"} if point == "after_replace" else set())
+    assert sorted(_ledger_rows(ledger_path)) == landed
+    for got, want in zip(reported, committed):
+        assert got is None or got == want
+    _s, ref, _h = run_drive_pipeline(spark, str(watch), str(tmp_path / "ref"))
+    cols = sorted(ref.columns)
+    assert sorted(map(tuple, aggs.select(*cols).collect())) == sorted(
+        map(tuple, ref.select(*cols).collect())
+    )
+
+
+def test_drive_idle_poll_launches_no_spark_job(spark, tmp_path):
+    """A tick with nothing new decides on the driver: zero Spark jobs
+    under its job group (the data tick before it, counted the same
+    way, launches some)."""
+    from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
+        run_drive_pipeline,
+    )
+
+    sc = spark.sparkContext
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    work = str(tmp_path / "work")
+    _write_loans(watch / "loan_a.csv", FILE_A)
+
+    def jobs_of_tick(group):
+        sc.setJobGroup(group, group)
+        try:
+            out = run_drive_pipeline(spark, str(watch), work)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+
+    _out, data_jobs = jobs_of_tick("drive-tick-data")
+    assert len(data_jobs) > 0
+    out, idle_jobs = jobs_of_tick("drive-tick-idle")
+    assert out == ([], None, None)
+    assert idle_jobs == []
+
+
 def test_airflow_dag_builder_gated_on_airflow(tmp_path):
     """build_dag needs Airflow only at call time: importing the module
     never does, and without Airflow installed the call raises the
     documented RuntimeError (skips if Airflow IS present — then the
     builder must return a DAG with the reference's task ids)."""
-    import pytest
-
     from airflow_loan_etl_pipeline_spark.plans import airflow_dag as ad
 
     try:

@@ -12,6 +12,8 @@ distribution properties.
 
 from __future__ import annotations
 
+import socket
+
 import pytest
 
 moto = pytest.importorskip("moto")
@@ -24,19 +26,27 @@ from airflow_loan_etl_pipeline_spark.sources.object_store import (  # noqa: E402
 )
 
 BUCKET = "spark-graft-it"
-PORT = 42907
+
+
+def _free_port() -> int:
+    """A loopback port free right now (a fixed port can be held by the
+    py4j gateway JVM, and the moto server then waits forever)."""
+    with socket.socket() as s:
+        s.bind(("127.0.0.1", 0))
+        return s.getsockname()[1]
 
 
 @pytest.fixture(scope="module")
 def s3(spark):
     from moto.server import ThreadedMotoServer
 
+    port = _free_port()
     server = ThreadedMotoServer(
-        ip_address="127.0.0.1", port=PORT, verbose=False
+        ip_address="127.0.0.1", port=port, verbose=False
     )
     server.start()
     ep = S3Endpoint(
-        endpoint=f"http://127.0.0.1:{PORT}",
+        endpoint=f"http://127.0.0.1:{port}",
         access_key="test",
         secret_key="test",
     )

@@ -98,7 +98,7 @@ def test_incremental_batch_ledger_exactly_once(spark, tmp_path):
     assert data3 is not None and data3.count() == 1
     assert [r["file_id"] for r in fresh3.collect()] == ["loan_b.csv"]
     update_ledger(spark, ledger, fresh3)
-    assert load_ledger(spark, ledger).count() == 2
+    assert len(load_ledger(ledger)) == 2
 
 
 def test_settle_age_gate(spark, tmp_path):
@@ -107,12 +107,12 @@ def test_settle_age_gate(spark, tmp_path):
     os.makedirs(land)
     _write_csv(f"{land}/loan_new.csv", ["L1,1.0"])
     now = time.time()
-    assert settled_files(spark, land, prefix="loan_", min_age_seconds=3600, now=now).count() == 0
-    assert settled_files(spark, land, prefix="loan_", min_age_seconds=0, now=now).count() == 1
+    assert len(settled_files(land, prefix="loan_", min_age_seconds=3600, now=now)) == 0
+    assert len(settled_files(land, prefix="loan_", min_age_seconds=0, now=now)) == 1
     # name predicate (F2)
     _write_csv(f"{land}/other.csv", ["L9,9.0"])
-    got = settled_files(spark, land, prefix="loan_", min_age_seconds=0, now=now)
-    assert [r["file_id"] for r in got.collect()] == ["loan_new.csv"]
+    got = settled_files(land, prefix="loan_", min_age_seconds=0, now=now)
+    assert [file_id for file_id, _path, _mtime in got] == ["loan_new.csv"]
 
 
 def test_streaming_cdc_upsert_sink(spark, tmp_path):
