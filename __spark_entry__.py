@@ -16,13 +16,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from airflow_loan_etl_pipeline_spark import registry
-from airflow_loan_etl_pipeline_spark import registry_text  # noqa: F401  (registers queries)
-from airflow_loan_etl_pipeline_spark import registry_stream  # noqa: F401  (registers queries)
-from airflow_loan_etl_pipeline_spark import registry_rel  # noqa: F401  (registers queries)
-from airflow_loan_etl_pipeline_spark import registry_mm  # noqa: F401  (registers queries)
-from airflow_loan_etl_pipeline_spark import registry_sql  # noqa: F401  (registers queries)
-from airflow_loan_etl_pipeline_spark import registry_stats  # noqa: F401  (registers queries)
 from airflow_loan_etl_pipeline_spark.plans.loan_etl import run_loan_etl
+
+registry.load_all()
 
 SF0001 = "/root/testdata/sf0.001"
 

@@ -44,6 +44,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import SparkSession
 
@@ -108,7 +109,9 @@ def run_spark_etl(
     — that would ingest unsettled/mid-copy files task 1 just
     excluded), aggregates written under ``work_dir``. Returns the
     aggregate row count. Idempotent: overwrite, so a task retry
-    re-lands the same frame."""
+    re-lands the same frame. When none of those files is left it
+    removes the previous aggregates and returns 0, so the report does
+    not show totals of deleted files."""
     from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
         aggregate_present,
     )
@@ -121,6 +124,8 @@ def run_spark_etl(
         spark, watch_dir, load_ledger(os.path.join(work_dir, "ledger"))
     )
     if aggs is None:
+        if os.path.isdir(paths["aggregates"]):
+            shutil.rmtree(paths["aggregates"])
         return 0
     aggs.write.mode("overwrite").parquet(paths["aggregates"])
     return spark.read.parquet(paths["aggregates"]).count()

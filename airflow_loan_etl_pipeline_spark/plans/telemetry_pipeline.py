@@ -107,10 +107,10 @@ def run_telemetry_pipeline(
     makes each epoch idempotent under foreachBatch replay.
 
     Returns the terminated StreamingQuery so callers can read
-    ``recentProgress`` — per-batch trigger→commit latency is a gated
-    bench artifact (round 10; ``max_files_per_trigger`` slices the
+    ``recentProgress`` — per-batch trigger→commit latency, which a
+    latency-budget test gates (``max_files_per_trigger`` slices the
     drain into multiple micro-batches so there is a per-batch
-    distribution to report)."""
+    distribution to check)."""
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         fold_batch(spark, batch_df, epoch_id, state_dir)

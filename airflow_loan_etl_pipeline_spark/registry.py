@@ -48,6 +48,19 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
+def load_all() -> None:
+    """Import every ``registry_*`` module of the package, so the whole
+    query library is registered. Each module imports this one, so the
+    imports happen here, at call time, not at module load."""
+    import importlib
+    import pkgutil
+
+    package = importlib.import_module(__package__)
+    for mod in pkgutil.iter_modules(package.__path__):
+        if mod.name.startswith("registry_"):
+            importlib.import_module(f"{__package__}.{mod.name}")
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 

@@ -1,6 +1,5 @@
 """Driver-contract invariants: the prefix-sampling rotation in
-__spark_entry__ (VERDICT r10 item 8) and bench.py's embedded noise
-probe (VERDICT r10 item 2)."""
+__spark_entry__ (VERDICT r10 item 8)."""
 
 from __future__ import annotations
 
@@ -85,57 +84,36 @@ def test_current_round_infers_from_artifacts(tmp_path, monkeypatch):
     assert entry._current_round() == 1
 
 
-def test_bench_headline_line_keeps_queries_map():
-    """VERDICT r12 item 1: the stdout headline must carry the full
-    per-query map within the driver's ~2000-char capture. Build the
-    exact field set main() emits with a worst-case 43-query map and
-    assert the serialized line fits WITHOUT demoting the map."""
+def test_entry_import_registers_every_registry_module():
+    """Importing ``__spark_entry__`` alone loads every ``registry_*``
+    module in the package (registry.load_all), so no query module can
+    be left unregistered. Run in a fresh interpreter: in this process
+    other test modules may already have imported them."""
     import json
+    import subprocess
+    import sys
+    from pathlib import Path
 
-    import bench
-
-    queries = {name: 12.345 for name in bench.HEADLINE}
-    assert len(queries) == 43
-    headline = {
-        "metric": "headline_suite_wall_clock",
-        "value": 123.456,
-        "unit": "sec",
-        "passes": "queries=cold; warm maps on stderr detail",
-        "queries": queries,
-        "sf": 0.1,
-        "value_warm": 123.456,
-        "value_warm_median": 123.456,
-        "value_warm_median_r1set": 123.456,
-        "noise_probe": {
-            "q": "nation_revenue",
-            "reps": 5,
-            "median_s": 1.207,
-            "solo_ref_s": 0.937,
-            "drift_x": 1.29,
-            "post_median_s": 1.207,
-            "post_drift_x": 1.29,
-            "unstable_window": True,
-        },
-    }
-    line = bench.format_headline_line(headline)
-    assert len(line) <= 1900
-    parsed = json.loads(line)
-    assert set(parsed["queries"]) == set(bench.HEADLINE)
-    # graceful degradation: a hostile budget sheds precision, then the
-    # map — but the line always stays parseable
-    short = json.loads(bench.format_headline_line(dict(headline), budget=600))
-    assert short["value"] == 123.456
-
-
-def test_bench_noise_probe_block(spark):
-    """bench.py's probe block carries the drift-accounting fields the
-    BENCH_r{N} artifact needs (probe median + factor vs archived solo
-    probe)."""
-    import bench
-
-    block = bench.noise_probe_block(spark, "/root/testdata/sf0.001", reps=1)
-    assert block["q"] == "nation_revenue"
-    assert block["median_s"] > 0
-    # BENCH_SOLO.json is committed in-repo, so the drift factor vs the
-    # archived solo probe must be present
-    assert "solo_ref_s" in block and "drift_x" in block
+    root = Path(entry.__file__).resolve().parent
+    package = Path(registry.__file__).resolve().parent
+    probe = (
+        "import json, sys\n"
+        "import __spark_entry__\n"
+        "from airflow_loan_etl_pipeline_spark import registry\n"
+        "print(json.dumps({'modules': sorted(m for m in sys.modules"
+        " if m.startswith('airflow_loan_etl_pipeline_spark.registry_')),"
+        " 'queries': len(registry.QUERIES),"
+        " 'oracle': len(registry.ORACLE)}))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=root, check=True,
+        capture_output=True, text=True,
+    ).stdout
+    got = json.loads(out.strip().splitlines()[-1])
+    files = sorted(
+        f"airflow_loan_etl_pipeline_spark.{p.stem}"
+        for p in package.glob("registry_*.py")
+    )
+    assert files and got["modules"] == files
+    assert got["queries"] == 275
+    assert got["oracle"] == 271

@@ -432,7 +432,8 @@ def test_airflow_dag_task_bodies_equivalent_to_single_plan(spark, tmp_path):
     reference task_ids poll_and_process_drive_files / run_spark_etl /
     send_summary_email), driven in sequence WITHOUT Airflow, must
     produce the same aggregates and report as the engine's single-plan
-    run_drive_pipeline, and keep the ledger idempotent across ticks."""
+    run_drive_pipeline, keep the ledger idempotent across ticks, and
+    report no totals once every source file is deleted."""
     from airflow_loan_etl_pipeline_spark.plans import airflow_dag as ad
     from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
         run_drive_pipeline,
@@ -470,6 +471,15 @@ def test_airflow_dag_task_bodies_equivalent_to_single_plan(spark, tmp_path):
     # tick 2: no new files -> task 1 returns [], ETL still idempotent
     assert ad.poll_and_process_drive_files(spark, str(watch), work_t) == []
     assert ad.run_spark_etl(spark, str(watch), work_t) == n
+
+    # tick 3: every source file deleted -> no aggregates, and the report
+    # must not show the previous tick's totals as current
+    for name in ("loan_a.csv", "loan_b.csv"):
+        (watch / name).unlink()
+    assert ad.poll_and_process_drive_files(spark, str(watch), work_t) == []
+    assert ad.run_spark_etl(spark, str(watch), work_t) == 0
+    html_3 = ad.send_summary_email(spark, work_t)
+    assert "<h2>Top segments</h2><p>(none)</p>" in html_3
 
 
 def _ledger_rows(ledger_path: str) -> list[str]:

@@ -17,17 +17,14 @@ import io
 from pyspark.sql import functions as F
 
 from airflow_loan_etl_pipeline_spark import registry
-from airflow_loan_etl_pipeline_spark import registry_mm  # noqa: F401
-from airflow_loan_etl_pipeline_spark import registry_rel  # noqa: F401
-from airflow_loan_etl_pipeline_spark import registry_stats  # noqa: F401
-from airflow_loan_etl_pipeline_spark import registry_stream  # noqa: F401
-from airflow_loan_etl_pipeline_spark import registry_text  # noqa: F401
 from airflow_loan_etl_pipeline_spark.catalog import load_table
 
 
 import pytest
 
 from airflow_loan_etl_pipeline_spark.operators import cache_scope
+
+registry.load_all()
 
 
 @pytest.fixture(autouse=True, scope="module")

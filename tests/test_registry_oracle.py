@@ -9,13 +9,9 @@ import duckdb
 import pytest
 
 from airflow_loan_etl_pipeline_spark import registry
-from airflow_loan_etl_pipeline_spark import registry_text  # noqa: F401
-from airflow_loan_etl_pipeline_spark import registry_stream  # noqa: F401
-from airflow_loan_etl_pipeline_spark import registry_rel  # noqa: F401
-from airflow_loan_etl_pipeline_spark import registry_mm  # noqa: F401
-from airflow_loan_etl_pipeline_spark import registry_sql  # noqa: F401
-from airflow_loan_etl_pipeline_spark import registry_stats  # noqa: F401
 from airflow_loan_etl_pipeline_spark.catalog import TABLE_NAMES
+
+registry.load_all()
 
 
 @pytest.fixture(scope="module")

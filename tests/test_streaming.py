@@ -3,6 +3,7 @@ drive of the windowed aggregations, and the batch-incremental ledger."""
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
@@ -622,15 +623,27 @@ def test_neardup_admission_idempotent_under_batch_redelivery(
     assert keys.filter(keys.doc_id == 5).count() == 4
 
 
+def _batch_latencies_ms(query) -> list[float]:
+    """Per-batch trigger→commit latency from a terminated streaming
+    query's progress ring (data-carrying batches only — AvailableNow
+    emits a final zero-row tick)."""
+    out = []
+    for p in query.recentProgress:
+        if isinstance(p, str):
+            p = json.loads(p)
+        if p.get("numInputRows", 0) > 0:
+            out.append(float(p["durationMs"]["triggerExecution"]))
+    return out
+
+
 def test_streaming_per_batch_latency_budget(spark, tmp_path):
-    """Round 10 (VERDICT r9 item 8): per-batch trigger→commit latency
-    for the stateful capstones is a GATED artifact — bench.py records
-    it per round, and this budget assertion catches an
-    order-of-magnitude regression (an accidental full-history refold,
-    a per-batch corpus rescan) at test time. Budgets are deliberately
-    generous (test-scale batches run ~1-4 s; budget 30 s) so host
-    noise cannot flake the gate while a 10x blowup still fails it."""
-    from bench import _batch_latencies_ms
+    """Per-batch trigger→commit latency of the two stateful capstones
+    (telemetry OHLC fold, near-dup admission), gated by the budget
+    assertions below: they catch an order-of-magnitude regression (an
+    accidental full-history refold, a per-batch corpus rescan) at test
+    time. Budgets are deliberately generous (test-scale batches run
+    ~1-4 s; budget 30 s) so host noise cannot flake the gate while a
+    10x blowup still fails it."""
     from airflow_loan_etl_pipeline_spark.plans.telemetry_pipeline import (
         run_telemetry_pipeline,
     )

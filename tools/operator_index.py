@@ -13,12 +13,8 @@ import sys
 sys.path.insert(0, "/root/repo")
 
 from airflow_loan_etl_pipeline_spark import registry  # noqa: E402
-from airflow_loan_etl_pipeline_spark import registry_mm  # noqa: E402, F401
-from airflow_loan_etl_pipeline_spark import registry_rel  # noqa: E402, F401
-from airflow_loan_etl_pipeline_spark import registry_sql  # noqa: E402, F401
-from airflow_loan_etl_pipeline_spark import registry_stats  # noqa: E402, F401
-from airflow_loan_etl_pipeline_spark import registry_stream  # noqa: E402, F401
-from airflow_loan_etl_pipeline_spark import registry_text  # noqa: E402, F401
+
+registry.load_all()
 
 
 def first_sentence(doc: str | None) -> str:

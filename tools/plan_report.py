@@ -14,13 +14,9 @@ import sys
 sys.path.insert(0, "/root/repo")
 
 from airflow_loan_etl_pipeline_spark import registry  # noqa: E402
-from airflow_loan_etl_pipeline_spark import registry_mm  # noqa: E402, F401
-from airflow_loan_etl_pipeline_spark import registry_rel  # noqa: E402, F401
-from airflow_loan_etl_pipeline_spark import registry_sql  # noqa: E402, F401
-from airflow_loan_etl_pipeline_spark import registry_stats  # noqa: E402, F401
-from airflow_loan_etl_pipeline_spark import registry_stream  # noqa: E402, F401
-from airflow_loan_etl_pipeline_spark import registry_text  # noqa: E402, F401
 from airflow_loan_etl_pipeline_spark.session import get_spark  # noqa: E402
+
+registry.load_all()
 
 MARKS = {
     "shuffles": "Exchange hashpartitioning",
