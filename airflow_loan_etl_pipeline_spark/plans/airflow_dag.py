@@ -18,19 +18,22 @@ Design:
   into PythonOperators with the REFERENCE'S task_ids and schedule, so
   existing monitoring/alerting keyed on dag_id/task_id keeps working.
   Without Airflow installed it raises a clear RuntimeError; importing
-  this module never requires Airflow.
+  this module never requires Airflow (the engine modules it binds are
+  imported at module top).
 - Handoff between tasks goes through ``work_dir`` artifacts (the
-  compression summary parquet, the aggregates parquet), not XCom —
+  compression summary JSON, the aggregates parquet), not XCom —
   XCom round-trips rows through the scheduler DB, which is the same
   driver-bottleneck shape the engine removes elsewhere.
 
 Semantics notes vs the engine's single-plan form
 (plans/drive_pipeline.run_drive_pipeline, equivalence-tested):
 
-- Task 1 uses the single-plan tick's screen (drive_pipeline.screen):
-  the settled listing minus the ledger, a driver-side set difference,
-  so a poll with nothing new launches no Spark job. Its ledger commit
-  is the same atomic file replace (file_source.update_ledger).
+- Task 1 uses the single-plan tick's screen (file_source.screen): the
+  settled listing minus the ledger, a driver-side set difference, so a
+  poll with nothing new launches no Spark job. It gzips the fresh
+  files on the driver with the same drive_pipeline.compress_fresh, and
+  its ledger commit is the same atomic file replace
+  (file_source.update_ledger).
 - The single-plan form updates the processed-file ledger only after
   the whole tick succeeds (strictest replay safety). The three-task
   split necessarily commits the ledger at the end of task 1 — the
@@ -45,8 +48,25 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from datetime import timedelta
 
 from pyspark.sql import SparkSession
+
+from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
+    aggregate_present,
+    compress_fresh,
+)
+from airflow_loan_etl_pipeline_spark.plans.loan_etl import latest_aggregates_summary
+from airflow_loan_etl_pipeline_spark.plans.report import (
+    render_html_report,
+    send_html_report,
+)
+from airflow_loan_etl_pipeline_spark.session import get_spark
+from airflow_loan_etl_pipeline_spark.streaming.file_source import (
+    load_ledger,
+    screen,
+    update_ledger,
+)
 
 
 def _work_paths(work_dir: str) -> dict:
@@ -67,18 +87,9 @@ def poll_and_process_drive_files(
 ) -> list[dict]:
     """Task 1 (reference :567 ``poll_and_process_drive_files``): screen
     the watched folder by settle age + processed ledger on the driver
-    (the single-plan tick's screen), compress fresh files on the
-    executors, land the compression summary under ``work_dir`` for the
+    (the single-plan tick's screen), gzip the fresh files on the
+    driver, land the compression summary under ``work_dir`` for the
     downstream tasks, and commit the ledger."""
-    from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
-        compress_fresh,
-        screen,
-    )
-    from airflow_loan_etl_pipeline_spark.streaming.file_source import (
-        load_ledger,
-        update_ledger,
-    )
-
     paths = _work_paths(work_dir)
     ledger_path = os.path.join(work_dir, "ledger")
     fresh = screen(watch_dir, load_ledger(ledger_path), prefix, min_age_s, now)
@@ -88,13 +99,16 @@ def poll_and_process_drive_files(
             json.dump([], f)
         return []
 
-    summaries, processed = compress_fresh(spark, fresh, work_dir)
+    summaries = compress_fresh(fresh, work_dir)
     # land the handoff BEFORE committing the ledger: a crash between
     # the two then re-processes the files on retry (commit-last replay
     # safety, same ordering as run_drive_pipeline) — the reverse order
     # would permanently drop this tick's files from the report
     with open(paths["summaries"], "w", encoding="utf-8") as f:
         json.dump(summaries, f)
+    processed = spark.createDataFrame(
+        [(name,) for name, _path, _mtime in fresh], "file_id string"
+    )
     update_ledger(spark, ledger_path, processed)
     return summaries
 
@@ -112,13 +126,6 @@ def run_spark_etl(
     re-lands the same frame. When none of those files is left it
     removes the previous aggregates and returns 0, so the report does
     not show totals of deleted files."""
-    from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
-        aggregate_present,
-    )
-    from airflow_loan_etl_pipeline_spark.streaming.file_source import (
-        load_ledger,
-    )
-
     paths = _work_paths(work_dir)
     aggs = aggregate_present(
         spark, watch_dir, load_ledger(os.path.join(work_dir, "ledger"))
@@ -140,14 +147,6 @@ def send_summary_email(
     summary from task 1's compression summary + task 2's aggregates
     and (when SMTP settings are provided) deliver it. Always writes
     the rendered HTML under ``work_dir`` and returns it."""
-    from airflow_loan_etl_pipeline_spark.plans.loan_etl import (
-        latest_aggregates_summary,
-    )
-    from airflow_loan_etl_pipeline_spark.plans.report import (
-        render_html_report,
-        send_html_report,
-    )
-
     paths = _work_paths(work_dir)
     with open(paths["summaries"], "r", encoding="utf-8") as f:
         file_summaries = json.load(f)
@@ -182,8 +181,6 @@ def build_dag(
     instead spins a fresh session per task, paying JVM startup
     thrice)."""
     try:
-        from datetime import timedelta
-
         from airflow import DAG
         from airflow.operators.python import PythonOperator
     except ImportError as e:
@@ -193,8 +190,6 @@ def build_dag(
             "send_summary_email) run without it — drive them from any "
             "scheduler"
         ) from e
-
-    from airflow_loan_etl_pipeline_spark.session import get_spark
 
     factory = spark_factory or (lambda: get_spark("drive_dag"))
 

@@ -3,27 +3,29 @@
 Mirrors drive_auto_compress_email.py:588-602 (`poll_and_process >>
 run_spark >> send_email_summary`) end to end: poll the watched folder,
 settle-age + processed-ledger screening, per-file gzip compression
-WITH the original/compressed size metrics computed on the executors
-(Arrow-batched — the reference round-trips every byte through the
-driver, :268-306), the loan ETL over the cumulative file set, and the
-HTML summary report (optionally delivered over SMTP).
+with the original/compressed size metrics, the loan ETL over the
+cumulative file set, and the HTML summary report (optionally
+delivered over SMTP).
 
 The screen is the reference's own Python set difference (:85-117,
-:184, :207) on the driver: settled listing minus ledger. A tick with
-nothing new returns before any Spark call; only fresh files reach the
-executors. The ledger commit is the tick's last step, one atomic file
-replace (file_source.update_ledger): a crash before it replays the
-whole tick, a crash after it replays nothing. The ETL reads the
+:184, :207) on the driver: settled listing minus ledger
+(file_source.screen). The gzip of the few fresh files also runs on the
+driver, as in the reference (:268-306): a Spark job would cost more
+than the compression. Spark reads and aggregates the loan data. A tick
+with nothing new returns before any Spark call. The ledger commit is
+the tick's last step, one atomic file replace
+(file_source.update_ledger): a crash before it replays the whole tick,
+a crash after it replays nothing. The ETL reads the
 ledgered files still in the folder plus the fresh ones, so a deleted
 source file drops out of the totals instead of failing later ticks.
 """
 
 from __future__ import annotations
 
+import gzip
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from airflow_loan_etl_pipeline_spark import schemas
 from airflow_loan_etl_pipeline_spark.plans.loan_etl import (
@@ -31,88 +33,45 @@ from airflow_loan_etl_pipeline_spark.plans.loan_etl import (
     latest_aggregates_summary,
 )
 from airflow_loan_etl_pipeline_spark.plans.report import (
-    compression_summary,
     render_html_report,
     send_html_report,
 )
 from airflow_loan_etl_pipeline_spark.sources.io import read_csv_dir
 from airflow_loan_etl_pipeline_spark.streaming.file_source import (
     load_ledger,
-    settled_files,
+    screen,
     update_ledger,
 )
 
 
-def screen(
-    watch_dir: str,
-    ledger: set[str],
-    prefix: str,
-    min_age_s: float,
-    now: float | None = None,
-) -> list[tuple[str, str]]:
-    """``(name, path)`` of the settled files not yet in ``ledger``."""
-    return [
-        (name, path)
-        for name, path, _mtime in settled_files(watch_dir, prefix, min_age_s, now)
-        if name not in ledger
-    ]
-
-
-def compress_new_files(fresh: DataFrame, out_dir: str) -> DataFrame:
-    """Executor-side gzip of each new file + size metrics: one Arrow
-    batch pass over (name, path) that reads each file's bytes where it
-    runs, no driver byte shuttling. ``out_dir`` must be a path every
-    executor can write (shared FS / object-store mount at cluster
-    scale)."""
-    import pandas as pd
-
-    def op(batches):
-        import gzip
-
-        os.makedirs(out_dir, exist_ok=True)
-        for pdf in batches:
-            names, osz, csz, paths = [], [], [], []
-            for name, path in zip(pdf["name"], pdf["path"]):
-                with open(path, "rb") as f:
-                    blob = f.read()
-                gz = gzip.compress(blob)
-                out_path = os.path.join(out_dir, name + ".gz")
-                with open(out_path, "wb") as f:
-                    f.write(gz)
-                names.append(name)
-                osz.append(len(blob))
-                csz.append(len(gz))
-                paths.append(out_path)
-            yield pd.DataFrame(
-                {
-                    "filename": names,
-                    "original_size": osz,
-                    "compressed_size": csz,
-                    "compressed_path": paths,
-                }
-            )
-
-    return fresh.select("name", "path").mapInPandas(
-        op,
-        schema="filename string, original_size bigint, "
-        "compressed_size bigint, compressed_path string",
-    )
-
-
 def compress_fresh(
-    spark: SparkSession, fresh: list[tuple[str, str]], work_dir: str
-) -> tuple[list[dict], DataFrame]:
-    """Gzip the fresh files under ``work_dir/compressed``. Returns the
-    collected compression summaries and the ``file_id`` frame to
-    commit to the ledger."""
-    files = spark.createDataFrame(fresh, "name string, path string")
-    summaries = compression_summary(
-        compress_new_files(files, os.path.join(work_dir, "compressed"))
-    )
-    return (
-        [r.asDict() for r in summaries.collect()],
-        files.select(F.col("name").alias("file_id")),
-    )
+    fresh: list[tuple[str, str, float]], work_dir: str
+) -> list[dict]:
+    """Gzip each fresh ``(name, path, mtime)`` file to
+    ``work_dir/compressed/<name>.gz`` on the driver, as the reference
+    does (:268-306), and return its summary: original and compressed
+    sizes and the compressed/original ratio (0.0 for an empty file,
+    :300-303)."""
+    out_dir = os.path.join(work_dir, "compressed")
+    os.makedirs(out_dir, exist_ok=True)
+    summaries = []
+    for name, path, _mtime in fresh:
+        with open(path, "rb") as f:
+            blob = f.read()
+        gz = gzip.compress(blob)
+        out_path = os.path.join(out_dir, name + ".gz")
+        with open(out_path, "wb") as f:
+            f.write(gz)
+        summaries.append(
+            {
+                "filename": name,
+                "original_size": len(blob),
+                "compressed_size": len(gz),
+                "compressed_path": out_path,
+                "ratio": len(gz) / len(blob) if blob else 0.0,
+            }
+        )
+    return summaries
 
 
 def aggregate_present(
@@ -153,14 +112,16 @@ def run_drive_pipeline(
     if not fresh:
         return [], None, None
 
-    file_summaries, processed = compress_fresh(spark, fresh, work_dir)
+    file_summaries = compress_fresh(fresh, work_dir)
+    names = [name for name, _path, _mtime in fresh]
     # ETL input = the SCREENED cumulative set — a raw watch-dir glob
     # would ingest unsettled/mid-copy files the screen just excluded
-    aggs = aggregate_present(spark, watch_dir, ledger | {n for n, _p in fresh})
+    aggs = aggregate_present(spark, watch_dir, ledger | set(names))
     top = latest_aggregates_summary(aggs, limit=10)
     html = render_html_report(file_summaries, top)
     if smtp:
         send_html_report(html, **smtp)
 
+    processed = spark.createDataFrame([(n,) for n in names], "file_id string")
     update_ledger(spark, ledger_path, processed)
     return file_summaries, aggs, html

@@ -5,25 +5,11 @@ aggregate segments into an HTML email
 (/root/reference/airflow/dags/drive_auto_compress_email.py:353-517) with
 human-readable byte sizes (:342-350) and a zero-guarded compression
 ratio (:300-303). The engine keeps the render driver-side (it IS a
-report edge — the only place ``collect()`` is allowed) but computes the
-metrics in-engine.
+report edge — the only place ``collect()`` is allowed). The per-file
+compression metrics come from plans/drive_pipeline.compress_fresh.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def compression_summary(files: DataFrame) -> DataFrame:
-    """M1: compressed/original ratio with zero-guard, in-engine."""
-    return files.withColumn(
-        "ratio",
-        F.when(
-            F.col("original_size") > 0,
-            F.col("compressed_size") / F.col("original_size"),
-        ).otherwise(F.lit(0.0)),
-    )
 
 
 def human_bytes(n: float | int) -> str:

@@ -17,7 +17,6 @@ corpus-sized work is each batch's own partial aggregation.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -26,15 +25,12 @@ from airflow_loan_etl_pipeline_spark.operators.timeseries import (
     merge_ohlc,
     ohlc_partial,
 )
+from airflow_loan_etl_pipeline_spark.sources.io import _restore_aside, _swap
 
 EVENT_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string,"
     " value double"
 )
-
-
-def _rmtree(path: str) -> None:
-    shutil.rmtree(path, ignore_errors=True)
 
 
 def _has_state(state_dir: str) -> bool:
@@ -67,11 +63,13 @@ def fold_batch(
     state directory itself (``_epoch`` marker written into the staging
     dir BEFORE the atomic aside-rename swap): state + marker move as
     one unit, so a replayed epoch is detected and skipped no matter
-    where the previous attempt died. Same aside-swap crash contract as
-    sources/io.py merge_upsert. (Spark ignores underscore-prefixed
-    files in a parquet directory, so the marker rides inside the
-    table.)
+    where the previous attempt died. The swap is sources/io.py
+    ``_swap``, and a state left aside by a crash inside it is renamed
+    back before the state is read, so the retry folds into it.
+    (Spark ignores underscore-prefixed files in a parquet directory, so
+    the marker rides inside the table.)
     """
+    _restore_aside(state_dir)
     if _has_state(state_dir) and epoch_id <= _applied_epoch(state_dir):
         return False  # replayed epoch: already folded into state
     part = ohlc_partial(batch_df)
@@ -83,12 +81,7 @@ def fold_batch(
     merged.write.mode("overwrite").parquet(staging)
     with open(os.path.join(staging, "_epoch"), "w") as fh:
         fh.write(str(epoch_id))
-    old = state_dir.rstrip("/") + ".__old__"
-    _rmtree(old)
-    if os.path.isdir(state_dir):
-        os.rename(state_dir, old)
-    os.rename(staging, state_dir)
-    _rmtree(old)
+    _swap(staging, state_dir)
     return True
 
 

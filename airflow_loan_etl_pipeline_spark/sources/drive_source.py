@@ -10,9 +10,10 @@ happens once at planning time, rows are served by EXECUTORS in
 page-sized partitions (the `page_size=100` pagination of
 google_drive_download.py:66 becomes the partition boundary — each page
 is a parallel task), and content reads happen inside the partition
-reader in bounded chunks (the chunked download of :125-147). Swapping
-the `os`-based listing for a Drive/S3/HTTP client changes only the two
-helper functions, not the Spark integration.
+reader in bounded chunks (the chunked download of :125-147). The
+local-folder readers list through streaming/file_source.py, the one
+rule for which landed files exist and which are new; as a streaming
+source the offset is ``{"seen": [sorted names]}``.
 
 Usage::
 
@@ -59,19 +60,36 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-_EXT_MIME = {
-    ".csv": "text/csv",
-    ".json": "application/json",
-    ".parquet": "application/vnd.apache.parquet",
-    ".txt": "text/plain",
-    ".gz": "application/gzip",
-}
+from airflow_loan_etl_pipeline_spark.streaming.file_source import (
+    _mime_of,
+    screen,
+    settled_files,
+)
 
 _CHUNK = 1 << 20  # 1 MiB chunked read, google_drive_download.py:138-143
 
 
-def _mime_of(name: str) -> str:
-    return _EXT_MIME.get(os.path.splitext(name)[1].lower(), "application/octet-stream")
+def _require_dir(options) -> str:
+    root = options.get("path")
+    if not root:
+        raise ValueError("file_listing source requires option 'path'")
+    if not os.path.isdir(root):
+        raise FileNotFoundError(f"file_listing path is not a directory: {root}")
+    return root
+
+
+def _file_row(path: str, with_content: bool) -> tuple:
+    """One ``file_listing`` row of a local file; the content, when
+    asked for, is read in bounded chunks."""
+    st = os.stat(path)
+    row = [path, os.path.basename(path), st.st_size, st.st_mtime, _mime_of(path)]
+    if with_content:
+        chunks = []
+        with open(path, "rb") as f:
+            while chunk := f.read(_CHUNK):
+                chunks.append(chunk)
+        row.append(b"".join(chunks))
+    return tuple(row)
 
 
 class _Page(InputPartition):
@@ -296,9 +314,7 @@ class FileListingDataSource(DataSource):
 
 class _ListingReader(DataSourceReader):
     def __init__(self, options):
-        self.root = options.get("path")
-        if not self.root:
-            raise ValueError("file_listing source requires option 'path'")
+        self.root = _require_dir(options)
         self.prefix = options.get("prefix", "")
         self.mime = options.get("mime")
         self.page_size = int(options.get("page_size", "100"))
@@ -310,40 +326,22 @@ class _ListingReader(DataSourceReader):
         # Planning-time listing with the PUSHED-DOWN predicates (the
         # reference pushes prefix/MIME into the Drive query string,
         # google_drive_download.py:84-97); each page of results becomes
-        # one input partition -> one parallel task.
-        names = sorted(
-            n
-            for n in os.listdir(self.root)
-            if n.startswith(self.prefix)
-            and (self.mime is None or _mime_of(n) == self.mime)
-            and os.path.isfile(os.path.join(self.root, n))
-        )
+        # one input partition -> one parallel task. No settle gate.
+        paths = [
+            path
+            for _name, path, _mtime in settled_files(
+                self.root, self.prefix, float("-inf"), mime=self.mime
+            )
+        ]
         pages = [
-            names[i : i + self.page_size]
-            for i in range(0, len(names), self.page_size)
+            paths[i : i + self.page_size]
+            for i in range(0, len(paths), self.page_size)
         ] or [[]]
-        return [_Page([os.path.join(self.root, n) for n in p]) for p in pages]
+        return [_Page(p) for p in pages]
 
     def read(self, partition: _Page):
         for path in partition.paths:
-            st = os.stat(path)
-            row = [
-                path,
-                os.path.basename(path),
-                st.st_size,
-                st.st_mtime,
-                _mime_of(path),
-            ]
-            if self.with_content:
-                chunks = []
-                with open(path, "rb") as f:
-                    while True:
-                        c = f.read(_CHUNK)
-                        if not c:
-                            break
-                        chunks.append(c)
-                row.append(b"".join(chunks))
-            yield tuple(row)
+            yield _file_row(path, self.with_content)
 
 
 class _DriveListingReader(DataSourceReader):
@@ -424,17 +422,15 @@ class _DriveListingReader(DataSourceReader):
 class _ListingStreamReader(SimpleDataSourceStreamReader):
     """Streaming variant: the reference's minute-cadence polling loop
     (drive_auto_compress_email.py:582, ledger :85-111) as a REAL
-    Structured Streaming source. The offset is an (mtime, name)
-    watermark persisted in the CHECKPOINT — Spark's offset log IS the
-    processed-file ledger, so exactly-once needs no side JSON file.
-    Each micro-batch serves files strictly after the previous offset in
-    (mtime, name) order; the settle delay (MIN_FILE_AGE_SECONDS,
-    :227-236) holds back files still being written."""
+    Structured Streaming source. The offset is the sorted list of file
+    names served so far, persisted in the CHECKPOINT — Spark's offset
+    log IS the processed-file ledger, so exactly-once needs no side
+    JSON file. Each micro-batch serves the settled files
+    (MIN_FILE_AGE_SECONDS, :227-236) whose names the previous offset
+    has not seen (file_source.screen), whatever their mtimes."""
 
     def __init__(self, options):
-        self.root = options.get("path")
-        if not self.root:
-            raise ValueError("file_listing source requires option 'path'")
+        self.root = _require_dir(options)
         self.prefix = options.get("prefix", "")
         self.mime = options.get("mime")
         self.with_content = (
@@ -443,46 +439,22 @@ class _ListingStreamReader(SimpleDataSourceStreamReader):
         self.settle_seconds = float(options.get("settle_seconds", "0"))
 
     def initialOffset(self) -> dict:
-        return {"mtime": 0.0, "name": ""}
-
-    def _eligible(self):
-        import time as _t
-
-        now = _t.time()
-        out = []
-        for n in os.listdir(self.root):
-            p = os.path.join(self.root, n)
-            if not n.startswith(self.prefix) or not os.path.isfile(p):
-                continue
-            if self.mime is not None and _mime_of(n) != self.mime:
-                continue
-            st = os.stat(p)
-            if now - st.st_mtime < self.settle_seconds:
-                continue
-            out.append((st.st_mtime, n, p, st.st_size))
-        return sorted(out)
+        return {"seen": []}
 
     def read(self, start: dict):
-        rows = []
-        hi_m, hi_n = start["mtime"], start["name"]
-        for mtime, name, path, size in self._eligible():
-            if (mtime, name) <= (hi_m, hi_n):
-                continue
-            row = [path, name, size, mtime, _mime_of(name)]
-            if self.with_content:
-                with open(path, "rb") as f:
-                    row.append(f.read())
-            rows.append(tuple(row))
-            hi_m, hi_n = mtime, name
-        return iter(rows), {"mtime": hi_m, "name": hi_n}
+        seen = set(start["seen"])
+        fresh = screen(
+            self.root, seen, self.prefix, self.settle_seconds, mime=self.mime
+        )
+        rows = [_file_row(path, self.with_content) for _n, path, _m in fresh]
+        return iter(rows), {"seen": sorted(seen.union(n for n, _p, _m in fresh))}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        # Replay path after a restart: deterministic re-list bounded by
-        # the two offsets.
-        rows, _ = self.read(start)
-        e = (end["mtime"], end["name"])
+        # Replay path after a restart: exactly the names the batch
+        # added to the offset, not a re-listing against the clock.
+        new = sorted(set(end["seen"]) - set(start["seen"]))
         return iter(
-            r for r in rows if (r[3], r[1]) <= e
+            [_file_row(os.path.join(self.root, n), self.with_content) for n in new]
         )
 
     def commit(self, end: dict) -> None:

@@ -30,6 +30,9 @@ Reference behaviors re-expressed Spark-first:
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from airflow_loan_etl_pipeline_spark.session import (
@@ -247,6 +250,43 @@ def write_zordered(
     )
 
 
+_ASIDE = ".__old__"
+
+
+def _restore_aside(path: str) -> None:
+    """Finish a :func:`_swap` that died midway. Its ``.__old__`` copy
+    is renamed back when ``path`` is missing (the swap died between its
+    two renames, so the copy is the last committed version) and deleted
+    otherwise (the swap died before dropping it)."""
+    old = path.rstrip("/") + _ASIDE
+    if not os.path.exists(old):
+        return
+    if os.path.exists(path):
+        shutil.rmtree(old)
+    else:
+        os.rename(old, path)
+
+
+def _swap(src: str, dst: str) -> None:
+    """Replace directory ``dst`` with ``src``: rename ``dst`` aside to
+    ``.__old__``, rename ``src`` in, drop the aside copy. A crash at any
+    point leaves the previous ``dst`` either in place or under
+    ``.__old__``, never neither; callers run :func:`_restore_aside` on
+    ``dst`` before reading it, so a retry starts from that version."""
+    _restore_aside(dst)
+    old = dst.rstrip("/") + _ASIDE
+    had_dst = os.path.exists(dst)
+    if had_dst:
+        os.rename(dst, old)
+    try:
+        os.rename(src, dst)
+    except OSError:
+        if had_dst:  # roll the previous table back in
+            os.rename(old, dst)
+        raise
+    shutil.rmtree(old, ignore_errors=True)
+
+
 def merge_upsert(
     spark: SparkSession,
     target_path: str,
@@ -273,11 +313,11 @@ def merge_upsert(
     - The merge is staged to ``<target>.__staging__`` (a SIBLING of the
       target, so the final swap is an intra-directory ``os.rename`` —
       never a cross-filesystem move) and swapped in only after the write
-      succeeds. The swap renames the live data ASIDE first
-      (``.__old__``), renames staging in, then deletes the old copy: a
-      crash between the two renames leaves the previous table intact
-      under ``.__old__`` (recoverable by renaming it back), never a
-      window with NO table at the path. Plain parquet on a local/HDFS
+      succeeds (:func:`_swap`). A crash between the swap's two renames
+      leaves the previous table intact under ``.__old__``; the next
+      call renames it back before it reads the target, so the retry
+      merges into the previous table instead of writing the updates
+      alone. Plain parquet on a local/HDFS
       path can't be fully atomic — a reader racing the swap can see the
       target briefly absent; a real table format (Delta/Iceberg) is the
       answer when concurrent readers matter.
@@ -288,12 +328,14 @@ def merge_upsert(
 
     Returns the number of partitions rewritten (1 for unpartitioned).
     """
-    import os as _os
-    import shutil as _shutil
-
     from pyspark.sql import functions as F
 
-    if not _os.path.exists(target_path):
+    _restore_aside(target_path)
+    if partition_col is not None and os.path.isdir(target_path):
+        for entry in os.listdir(target_path):
+            if entry.endswith(_ASIDE):
+                _restore_aside(os.path.join(target_path, entry[: -len(_ASIDE)]))
+    if not os.path.exists(target_path):
         write_parquet(
             updates, target_path,
             partition_by=[partition_col] if partition_col else None,
@@ -301,23 +343,8 @@ def merge_upsert(
         return 1
 
     staging = target_path.rstrip("/") + ".__staging__"
-    _shutil.rmtree(staging, ignore_errors=True)
+    shutil.rmtree(staging, ignore_errors=True)
     upd_keys = updates.select(*keys).distinct()
-
-    def _swap(src: str, dst: str) -> None:
-        """Replace dst with src: aside-rename, swap in, drop the old."""
-        old = dst.rstrip("/") + ".__old__"
-        _shutil.rmtree(old, ignore_errors=True)
-        had_dst = _os.path.exists(dst)
-        if had_dst:
-            _os.rename(dst, old)
-        try:
-            _os.rename(src, dst)
-        except OSError:
-            if had_dst:  # roll the previous table back in
-                _os.rename(old, dst)
-            raise
-        _shutil.rmtree(old, ignore_errors=True)
 
     if partition_col is None:
         target = spark.read.parquet(target_path)
@@ -342,14 +369,14 @@ def merge_upsert(
     for val in touched:
         part_val = "__HIVE_DEFAULT_PARTITION__" if val is None else str(val)
         part_dir = f"{partition_col}={part_val}"
-        src = _os.path.join(staging, part_dir)
-        dst = _os.path.join(target_path, part_dir)
-        if _os.path.exists(src):
+        src = os.path.join(staging, part_dir)
+        dst = os.path.join(target_path, part_dir)
+        if os.path.exists(src):
             _swap(src, dst)
-        elif _os.path.exists(dst):
+        elif os.path.exists(dst):
             # all rows of this partition were deleted by the merge
-            _shutil.rmtree(dst)
-    _shutil.rmtree(staging, ignore_errors=True)
+            shutil.rmtree(dst)
+    shutil.rmtree(staging, ignore_errors=True)
     return len(touched)
 
 

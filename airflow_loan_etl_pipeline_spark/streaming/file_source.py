@@ -4,20 +4,17 @@ The reference hand-rolls a micro-batch file stream: a per-minute cron
 poll, a persisted JSON ledger of processed file IDs, and a 60-second
 minimum file age so in-flight uploads aren't consumed
 (/root/reference/airflow/dags/drive_auto_compress_email.py:582, :85-111,
-:71, :227-236). Those are exactly the semantics of Spark Structured
-Streaming's file source, so the idiomatic rebuild is:
+:71, :227-236). This module is the one place that decides which landed
+files are new: :func:`settled_files` lists the folder (F2/F4) and
+:func:`screen` removes the names already processed (F3, :184, :207) —
+the reference's own Python set difference, on the driver, no Spark job.
 
-- **Streaming mode** (`stream_csv_dir`): `readStream` + checkpoint. The
-  checkpointed seen-files log IS the ledger (ST2); `Trigger.AvailableNow`
-  IS the cron poll that drains everything then stops (ST1);
-  `maxFileAge` / modifiedAfter options handle the settle window (ST3).
-- **Batch-incremental mode** (`incremental_batch`, and the drive tick
-  in plans/drive_pipeline.py): the screen is the reference's own
-  Python set difference — settled listing (F2/F4, :227-236) minus a
-  small ledger of processed ids (F3, :184, :207) — run on the driver
-  with no Spark job. The ledger is one parquet file replaced
-  atomically (`update_ledger`), committed only after the batch's
+- The drive tick, the Airflow task bodies and :func:`incremental_batch`
+  screen against a ledger of processed ids: one parquet file replaced
+  atomically (:func:`update_ledger`), committed only after the batch's
   sinks succeed, so every file lands in exactly one committed batch.
+- The ``file_listing`` streaming source (sources/drive_source.py)
+  screens against the names in its checkpointed offset (ST2).
 """
 
 from __future__ import annotations
@@ -32,22 +29,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from airflow_loan_etl_pipeline_spark.sources.drive_source import _mime_of
+_EXT_MIME = {
+    ".csv": "text/csv",
+    ".json": "application/json",
+    ".parquet": "application/vnd.apache.parquet",
+    ".txt": "text/plain",
+    ".gz": "application/gzip",
+}
 
 
-def stream_csv_dir(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """ST1/ST2: streaming scan of a CSV landing directory. Pair with
-    ``.writeStream.option("checkpointLocation", ...)`` — the checkpoint
-    replaces the reference's JSON ledger."""
-    reader = spark.readStream.schema(schema).option("header", True)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.csv(path)
+def _mime_of(name: str) -> str:
+    return _EXT_MIME.get(os.path.splitext(name)[1].lower(), "application/octet-stream")
 
 
 def settled_files(
@@ -55,23 +47,45 @@ def settled_files(
     prefix: str = "",
     min_age_seconds: float = 60.0,
     now: float | None = None,
-    mime: str = "text/csv",
+    mime: str | None = "text/csv",
 ) -> list[tuple[str, str, float]]:
     """F2/F4: ``(file_id, path, mtime)`` of the regular files in
-    ``input_dir`` that pass the name-prefix and MIME predicates and the
-    settle-age gate (reference MIN_FILE_AGE_SECONDS,
-    drive_auto_compress_email.py:71, :227-236), sorted by name. Plain
-    driver-side metadata: no Spark job."""
+    ``input_dir`` that pass the name-prefix and MIME predicates
+    (``mime=None``: any type) and the settle-age gate (reference
+    MIN_FILE_AGE_SECONDS, drive_auto_compress_email.py:71, :227-236;
+    ``float("-inf")``: no gate), sorted by name. Plain driver-side
+    metadata: no Spark job."""
     now = time.time() if now is None else now
     out = []
     if os.path.isdir(input_dir):
         for name in sorted(os.listdir(input_dir)):
             path = os.path.join(input_dir, name)
-            if name.startswith(prefix) and _mime_of(name) == mime and os.path.isfile(path):
+            if (
+                name.startswith(prefix)
+                and (mime is None or _mime_of(name) == mime)
+                and os.path.isfile(path)
+            ):
                 mtime = os.path.getmtime(path)
                 if now - mtime >= min_age_seconds:
                     out.append((name, path, mtime))
     return out
+
+
+def screen(
+    input_dir: str,
+    processed: set[str],
+    prefix: str = "",
+    min_age_seconds: float = 60.0,
+    now: float | None = None,
+    mime: str | None = "text/csv",
+) -> list[tuple[str, str, float]]:
+    """The :func:`settled_files` triples whose name is not in
+    ``processed``: the files a tick or micro-batch has to take."""
+    return [
+        f
+        for f in settled_files(input_dir, prefix, min_age_seconds, now, mime)
+        if f[0] not in processed
+    ]
 
 
 def load_ledger(ledger_path: str) -> set[str]:
@@ -133,12 +147,7 @@ def incremental_batch(
     (process first, persist ledger last,
     drive_auto_compress_email.py:312, :336).
     """
-    ledger = load_ledger(ledger_path)
-    fresh = [
-        f
-        for f in settled_files(input_dir, prefix, min_age_seconds)
-        if f[0] not in ledger
-    ]
+    fresh = screen(input_dir, load_ledger(ledger_path), prefix, min_age_seconds)
     processed = spark.createDataFrame(
         fresh, "file_id string, path string, mtime double"
     )

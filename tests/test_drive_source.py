@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 
 def _register(spark):
     from airflow_loan_etl_pipeline_spark.sources.drive_source import (
@@ -110,6 +112,61 @@ def test_streaming_listing_exactly_once(spark, tmp_path):
     run_once()
     assert sorted(r.name for r in got) == ["loan_a.csv", "loan_b.csv"]
     assert len(got) == 2  # exactly once: loan_a not re-served
+
+
+def test_stream_reader_serves_file_landing_with_older_mtime(tmp_path):
+    """Reader level, no query: a file that lands AFTER a served file but
+    carries an OLDER mtime (moved in from a staging folder) is still
+    served by the next read, and readBetweenOffsets replays exactly the
+    names a batch added to the offset."""
+    import time as _time
+
+    from airflow_loan_etl_pipeline_spark.sources.drive_source import (
+        _ListingStreamReader,
+    )
+
+    d = tmp_path / "landing"
+    d.mkdir()
+    now = _time.time()
+
+    def land(name, age_s):
+        f = d / name
+        f.write_text("id\n1\n")
+        os.utime(f, (now - age_s, now - age_s))
+
+    reader = _ListingStreamReader({"path": str(d), "prefix": "loan_"})
+    start = reader.initialOffset()
+    land("loan_b.csv", 100)
+    rows, off1 = reader.read(start)
+    assert [r[1] for r in rows] == ["loan_b.csv"]
+
+    land("loan_a.csv", 200)
+    rows, off2 = reader.read(off1)
+    assert [r[1] for r in rows] == ["loan_a.csv"]
+    rows, same = reader.read(off2)
+    assert list(rows) == [] and same == off2
+
+    land("loan_c.csv", 300)
+    land("loan_d.csv", 50)
+    _rows, off3 = reader.read(off2)
+    replay = list(reader.readBetweenOffsets(off2, off3))
+    assert sorted(r[1] for r in replay) == ["loan_c.csv", "loan_d.csv"]
+    assert all(r[0] == str(d / r[1]) and r[2] > 0 for r in replay)
+
+
+def test_listing_readers_raise_on_missing_dir(tmp_path):
+    """A missing folder is an error, not an empty listing."""
+    from airflow_loan_etl_pipeline_spark.sources.drive_source import (
+        _ListingReader,
+        _ListingStreamReader,
+    )
+
+    missing = {"path": str(tmp_path / "missing")}
+    with pytest.raises(FileNotFoundError):
+        _ListingReader(missing).partitions()
+    with pytest.raises(FileNotFoundError):
+        stream = _ListingStreamReader(missing)
+        stream.read(stream.initialOffset())
 
 
 def _write_drive_fixture(root) -> None:

@@ -404,7 +404,7 @@ def test_drive_pipeline_full_dag_equivalent(spark, tmp_path):
     for s in summaries:
         assert s["original_size"] > 0 and s["compressed_size"] > 0
         assert 0 < s["ratio"]
-        # executor-written gzip round-trips to the original bytes
+        # the gzip written by the tick round-trips to the original bytes
         raw = (watch / s["filename"]).read_bytes()
         assert gzip.decompress(open(s["compressed_path"], "rb").read()) == raw
     assert sum(r["loan_count"] for r in aggs.collect()) == 6
@@ -425,6 +425,69 @@ def test_drive_pipeline_full_dag_equivalent(spark, tmp_path):
     )
     assert [s["filename"] for s in summaries3] == ["loan_c.csv"]
     assert sum(r["loan_count"] for r in aggs3.collect()) == 7
+
+
+def test_compress_fresh_gzips_on_the_driver(tmp_path):
+    """No Spark session: one normal and one zero-byte file become gzip
+    files that round-trip, with exact sizes, a 0.0 ratio for the empty
+    file and the report's column order."""
+    import gzip
+
+    from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import compress_fresh
+
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    _write_loans(watch / "loan_a.csv", FILE_A)
+    (watch / "loan_empty.csv").write_bytes(b"")
+    fresh = [(n, str(watch / n), 0.0) for n in ("loan_a.csv", "loan_empty.csv")]
+    work = str(tmp_path / "work")
+
+    summaries = compress_fresh(fresh, work)
+
+    assert [s["filename"] for s in summaries] == ["loan_a.csv", "loan_empty.csv"]
+    for s in summaries:
+        assert list(s) == [
+            "filename", "original_size", "compressed_size", "compressed_path", "ratio",
+        ]
+        raw = (watch / s["filename"]).read_bytes()
+        gz = open(s["compressed_path"], "rb").read()
+        gz_path = os.path.join(work, "compressed", s["filename"] + ".gz")
+        assert s["compressed_path"] == gz_path
+        assert gzip.decompress(gz) == raw
+        assert (s["original_size"], s["compressed_size"]) == (len(raw), len(gz))
+    assert summaries[0]["ratio"] == summaries[0]["compressed_size"] / len(
+        (watch / "loan_a.csv").read_bytes()
+    )
+    assert summaries[1]["ratio"] == 0.0
+
+
+def test_drive_tick_commits_zero_byte_file(spark, tmp_path):
+    """A data tick whose only fresh file is empty commits it and leaves
+    the totals as they were."""
+    from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
+        run_drive_pipeline,
+    )
+
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    work = str(tmp_path / "work")
+    _write_loans(watch / "loan_a.csv", FILE_A)
+    _s, aggs, _h = run_drive_pipeline(spark, str(watch), work)
+    cols = sorted(aggs.columns)
+    before = sorted(map(tuple, aggs.select(*cols).collect()))
+
+    (watch / "loan_empty.csv").write_bytes(b"")
+    summaries, aggs2, html = run_drive_pipeline(spark, str(watch), work)
+
+    assert [(s["filename"], s["original_size"], s["ratio"]) for s in summaries] == [
+        ("loan_empty.csv", 0, 0.0)
+    ]
+    assert sorted(map(tuple, aggs2.select(*cols).collect())) == before
+    assert "loan_empty.csv" in html
+    assert sorted(_ledger_rows(os.path.join(work, "ledger"))) == [
+        "loan_a.csv", "loan_empty.csv",
+    ]
+    assert run_drive_pipeline(spark, str(watch), work) == ([], None, None)
 
 
 def test_airflow_dag_task_bodies_equivalent_to_single_plan(spark, tmp_path):

@@ -7,6 +7,7 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 from airflow_loan_etl_pipeline_spark.catalog import load_table
@@ -324,6 +325,47 @@ def test_merge_upsert_swap_leaves_no_stale_aside(spark, tmp_path):
     assert "swapclean" in siblings
     assert not [s for s in siblings if "__old__" in s or "__staging__" in s]
     assert spark.read.parquet(target).collect()[0].v == "b"
+
+
+class _Crash(BaseException):
+    """A process death: not an OSError, so no rollback handler runs."""
+
+
+@pytest.mark.parametrize("partition_col", [None, "p"])
+def test_merge_upsert_survives_crash_inside_swap(
+    spark, tmp_path, monkeypatch, partition_col
+):
+    """Fault injection: the process dies after the target (or its
+    partition) is renamed aside but before staging is renamed in. The
+    retried call must merge into the previous table, not write the
+    updates alone as the whole table."""
+    import os
+
+    from airflow_loan_etl_pipeline_spark.sources.io import merge_upsert
+
+    target = str(tmp_path / "crashy")
+    schema = "k int, v string, p int"
+    base = spark.createDataFrame([(k, "a", k % 2) for k in range(5)], schema)
+    merge_upsert(spark, target, base, ["k"], partition_col=partition_col)
+    update = spark.createDataFrame([(2, "b", 0)], schema)
+
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if ".__staging__" in str(src):
+            raise _Crash()
+        return real_rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", rename)
+        with pytest.raises(_Crash):
+            merge_upsert(spark, target, update, ["k"], partition_col=partition_col)
+    merge_upsert(spark, target, update, ["k"], partition_col=partition_col)
+
+    got = {r.k: r.v for r in spark.read.parquet(target).collect()}
+    assert got == {0: "a", 1: "a", 2: "b", 3: "a", 4: "a"}
+    left = os.listdir(tmp_path) + os.listdir(target)
+    assert not [n for n in left if "__old__" in n or "__staging__" in n]
 
 
 def test_write_sorted_ranges_do_not_overlap(spark, sf_dir, tmp_path):

@@ -465,6 +465,49 @@ def test_telemetry_fold_is_idempotent_under_replay(spark, tmp_path):
     assert row.n_events == 3 and row.high == 100.0
 
 
+class _Crash(BaseException):
+    """A process death: not an OSError, so no rollback handler runs."""
+
+
+def test_telemetry_fold_survives_crash_inside_swap(spark, tmp_path, monkeypatch):
+    """Fault injection: the fold of epoch 1 dies after the state is
+    renamed aside but before staging is renamed in. The retried epoch
+    must fold into the epoch-0 state, not into empty state."""
+    import datetime
+
+    import pytest
+
+    from airflow_loan_etl_pipeline_spark.plans.telemetry_pipeline import (
+        fold_batch,
+        read_bars,
+    )
+
+    state = str(tmp_path / "state")
+    schema = (
+        "event_id long, ts timestamp, user_id long, event_type string,"
+        " value double"
+    )
+    t0 = datetime.datetime(2024, 1, 1, 10, 0, 0)
+    b1 = spark.createDataFrame([(1, t0, 1, "m", 5.0), (2, t0, 1, "m", 7.0)], schema)
+    b2 = spark.createDataFrame([(3, t0, 1, "m", 100.0)], schema)
+    assert fold_batch(spark, b1, 0, state) is True
+
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if str(src).endswith(".__staging__"):
+            raise _Crash()
+        return real_rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", rename)
+        with pytest.raises(_Crash):
+            fold_batch(spark, b2, 1, state)
+    assert fold_batch(spark, b2, 1, state) is True
+    row = read_bars(spark, state).collect()[0]
+    assert row.n_events == 3 and row.high == 100.0
+
+
 def test_available_now_respects_max_files_per_trigger(spark, tmp_path):
     """Backpressure knob: maxFilesPerTrigger bounds each micro-batch to
     one landed file, so AvailableNow drains the backlog as several
