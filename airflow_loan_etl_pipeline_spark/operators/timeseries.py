@@ -424,77 +424,3 @@ def latest_state(
         *[F.col(f"_last.{c}").alias(f"last_{c}") for c in payload_cols],
         "n_events",
     )
-
-
-def ohlc_partial(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    val_col: str = "value",
-    order_tiebreak: str = "event_id",
-    bucket: str = "hour",
-) -> DataFrame:
-    """Mergeable OHLC partial state: like :func:`ohlc_bars` but carrying
-    the open/close ORDER KEYS (event-time structs) and the unrounded
-    volume, so partial bars from different micro-batches can be merged
-    exactly even when a batch boundary splits a bucket — the
-    decomposable form incremental maintenance needs (same discipline as
-    aggregates.merge_aggregates). Finalize with :func:`finalize_ohlc`.
-    """
-    order = F.struct(
-        F.col(ts_col).alias("_ts"), F.col(order_tiebreak).alias("_id")
-    )
-    return (
-        events.select(
-            F.col(key_col),
-            F.date_trunc(bucket, F.col(ts_col)).alias("bar_ts"),
-            F.col(ts_col),
-            F.col(order_tiebreak),
-            F.col(val_col),
-        )
-        .groupBy(key_col, "bar_ts")
-        .agg(
-            F.min_by(F.col(val_col), order).alias("open"),
-            F.min(order).alias("open_ord"),
-            F.max(F.col(val_col)).alias("high"),
-            F.min(F.col(val_col)).alias("low"),
-            F.max_by(F.col(val_col), order).alias("close"),
-            F.max(order).alias("close_ord"),
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col(val_col)).alias("volume_raw"),
-        )
-    )
-
-
-def merge_ohlc(a: DataFrame, b: DataFrame, key_col: str = "event_type") -> DataFrame:
-    """Merge two OHLC partial states (associative, commutative): the
-    union's per-bucket open is the value whose order key is globally
-    minimal, and every other component is a plain semigroup merge —
-    history bars are never recomputed from raw events.
-    """
-    u = a.unionByName(b)
-    return u.groupBy(key_col, "bar_ts").agg(
-        F.min_by(F.col("open"), F.col("open_ord")).alias("open"),
-        F.min("open_ord").alias("open_ord"),
-        F.max("high").alias("high"),
-        F.min("low").alias("low"),
-        F.max_by(F.col("close"), F.col("close_ord")).alias("close"),
-        F.max("close_ord").alias("close_ord"),
-        F.sum("n_events").alias("n_events"),
-        F.sum("volume_raw").alias("volume_raw"),
-    )
-
-
-def finalize_ohlc(state: DataFrame, key_col: str = "event_type") -> DataFrame:
-    """Drop the merge bookkeeping and round: the read-edge view of the
-    incremental OHLC state, schema-identical to :func:`ohlc_bars`."""
-    return state.select(
-        F.col(key_col),
-        "bar_ts",
-        "open",
-        "high",
-        "low",
-        "close",
-        "n_events",
-        F.round(F.col("volume_raw"), 2).alias("volume"),
-    )

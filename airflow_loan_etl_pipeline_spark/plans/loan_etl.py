@@ -8,7 +8,7 @@ multi-key aggregate → deterministic order, plus the top-k report reader
 
 - imputation is a single pass (operators/cleaning.py), not per-column;
 - one SparkSession for the whole process;
-- sinks don't coalesce(1) by default;
+- sinks never coalesce(1);
 - the report edge reuses the session instead of building a second one.
 """
 

@@ -135,8 +135,8 @@ def engine_parallelism(spark: SparkSession) -> int:
     Where the explicit-set probe is unavailable (Spark Connect, vendor
     runtimes), a literal 200 is treated as stock — set any other value
     (even 199/201) to force a width through the fallback.
-    File-COUNT decisions (e.g. write_sorted's default) deliberately use
-    raw defaultParallelism instead of this function."""
+    File-COUNT decisions (one healthy output file per writer) should
+    use raw defaultParallelism instead of this function."""
     sc = spark.sparkContext
     shuffle = 0
     try:

@@ -11,9 +11,10 @@ page-sized partitions (the `page_size=100` pagination of
 google_drive_download.py:66 becomes the partition boundary — each page
 is a parallel task), and content reads happen inside the partition
 reader in bounded chunks (the chunked download of :125-147). The
-local-folder readers list through streaming/file_source.py, the one
-rule for which landed files exist and which are new; as a streaming
-source the offset is ``{"seen": [sorted names]}``.
+local-folder reader lists through streaming/file_source.py
+(``settled_files``), the one rule for which landed files exist. It is
+a batch reader: which files are new is the processed-ids ledger's
+decision (file_source.screen), not this source's.
 
 Usage::
 
@@ -53,43 +54,14 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from airflow_loan_etl_pipeline_spark.streaming.file_source import (
     _mime_of,
-    screen,
     settled_files,
 )
 
 _CHUNK = 1 << 20  # 1 MiB chunked read, google_drive_download.py:138-143
-
-
-def _require_dir(options) -> str:
-    root = options.get("path")
-    if not root:
-        raise ValueError("file_listing source requires option 'path'")
-    if not os.path.isdir(root):
-        raise FileNotFoundError(f"file_listing path is not a directory: {root}")
-    return root
-
-
-def _file_row(path: str, with_content: bool) -> tuple:
-    """One ``file_listing`` row of a local file; the content, when
-    asked for, is read in bounded chunks."""
-    st = os.stat(path)
-    row = [path, os.path.basename(path), st.st_size, st.st_mtime, _mime_of(path)]
-    if with_content:
-        chunks = []
-        with open(path, "rb") as f:
-            while chunk := f.read(_CHUNK):
-                chunks.append(chunk)
-        row.append(b"".join(chunks))
-    return tuple(row)
 
 
 class _Page(InputPartition):
@@ -308,13 +280,16 @@ class FileListingDataSource(DataSource):
             return _DriveListingReader(self.options)
         return _ListingReader(self.options)
 
-    def simpleStreamReader(self, schema) -> SimpleDataSourceStreamReader:
-        return _ListingStreamReader(self.options)
-
 
 class _ListingReader(DataSourceReader):
     def __init__(self, options):
-        self.root = _require_dir(options)
+        self.root = options.get("path")
+        if not self.root:
+            raise ValueError("file_listing source requires option 'path'")
+        if not os.path.isdir(self.root):
+            raise FileNotFoundError(
+                f"file_listing path is not a directory: {self.root}"
+            )
         self.prefix = options.get("prefix", "")
         self.mime = options.get("mime")
         self.page_size = int(options.get("page_size", "100"))
@@ -341,7 +316,15 @@ class _ListingReader(DataSourceReader):
 
     def read(self, partition: _Page):
         for path in partition.paths:
-            yield _file_row(path, self.with_content)
+            st = os.stat(path)
+            row = [path, os.path.basename(path), st.st_size, st.st_mtime, _mime_of(path)]
+            if self.with_content:
+                chunks = []
+                with open(path, "rb") as f:
+                    while chunk := f.read(_CHUNK):
+                        chunks.append(chunk)
+                row.append(b"".join(chunks))
+            yield tuple(row)
 
 
 class _DriveListingReader(DataSourceReader):
@@ -417,45 +400,3 @@ class _DriveListingReader(DataSourceReader):
             if self.with_content:
                 row.append(b"".join(transport.download(f["id"])))
             yield tuple(row)
-
-
-class _ListingStreamReader(SimpleDataSourceStreamReader):
-    """Streaming variant: the reference's minute-cadence polling loop
-    (drive_auto_compress_email.py:582, ledger :85-111) as a REAL
-    Structured Streaming source. The offset is the sorted list of file
-    names served so far, persisted in the CHECKPOINT — Spark's offset
-    log IS the processed-file ledger, so exactly-once needs no side
-    JSON file. Each micro-batch serves the settled files
-    (MIN_FILE_AGE_SECONDS, :227-236) whose names the previous offset
-    has not seen (file_source.screen), whatever their mtimes."""
-
-    def __init__(self, options):
-        self.root = _require_dir(options)
-        self.prefix = options.get("prefix", "")
-        self.mime = options.get("mime")
-        self.with_content = (
-            options.get("with_content", "false").lower() == "true"
-        )
-        self.settle_seconds = float(options.get("settle_seconds", "0"))
-
-    def initialOffset(self) -> dict:
-        return {"seen": []}
-
-    def read(self, start: dict):
-        seen = set(start["seen"])
-        fresh = screen(
-            self.root, seen, self.prefix, self.settle_seconds, mime=self.mime
-        )
-        rows = [_file_row(path, self.with_content) for _n, path, _m in fresh]
-        return iter(rows), {"seen": sorted(seen.union(n for n, _p, _m in fresh))}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        # Replay path after a restart: exactly the names the batch
-        # added to the offset, not a re-listing against the clock.
-        new = sorted(set(end["seen"]) - set(start["seen"]))
-        return iter(
-            [_file_row(os.path.join(self.root, n), self.with_content) for n in new]
-        )
-
-    def commit(self, end: dict) -> None:
-        pass

@@ -1,4 +1,7 @@
-"""Streaming package. See file_source / windows / stateful / joins.
+"""Streaming package: the Structured Streaming operators (windows,
+stateful, joins, admission, monitor) and file_source, the landing-folder
+screen and processed-ids ledger of the drive tick (a driver-side batch
+protocol, not a stream source).
 
 One shared knob lives here: :func:`stream_state_partitions`.
 """

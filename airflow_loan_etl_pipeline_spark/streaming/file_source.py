@@ -1,4 +1,4 @@
-"""Incremental file ingestion (SURVEY.md §2.9 ST1-ST6).
+"""Incremental file ingestion (SURVEY.md §2.9 ST1, ST2).
 
 The reference hand-rolls a micro-batch file stream: a per-minute cron
 poll, a persisted JSON ledger of processed file IDs, and a 60-second
@@ -9,12 +9,13 @@ files are new: :func:`settled_files` lists the folder (F2/F4) and
 :func:`screen` removes the names already processed (F3, :184, :207) —
 the reference's own Python set difference, on the driver, no Spark job.
 
-- The drive tick, the Airflow task bodies and :func:`incremental_batch`
-  screen against a ledger of processed ids: one parquet file replaced
-  atomically (:func:`update_ledger`), committed only after the batch's
-  sinks succeed, so every file lands in exactly one committed batch.
-- The ``file_listing`` streaming source (sources/drive_source.py)
-  screens against the names in its checkpointed offset (ST2).
+The ledger of processed ids is the engine's only exactly-once
+protocol. The drive tick and the Airflow task bodies screen against it
+and commit a batch with :func:`update_ledger`, one parquet file
+replaced atomically, only after the batch's sinks succeed, so every
+file lands in exactly one committed batch. The ledger holds names: a
+file rewritten under a ledgered name is not new, and the next data
+tick's totals read its current content.
 """
 
 from __future__ import annotations
@@ -26,8 +27,6 @@ from datetime import datetime, timezone
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _EXT_MIME = {
     ".csv": "text/csv",
@@ -77,13 +76,12 @@ def screen(
     prefix: str = "",
     min_age_seconds: float = 60.0,
     now: float | None = None,
-    mime: str | None = "text/csv",
 ) -> list[tuple[str, str, float]]:
-    """The :func:`settled_files` triples whose name is not in
-    ``processed``: the files a tick or micro-batch has to take."""
+    """The CSV :func:`settled_files` triples whose name is not in
+    ``processed``: the files a tick has to take."""
     return [
         f
-        for f in settled_files(input_dir, prefix, min_age_seconds, now, mime)
+        for f in settled_files(input_dir, prefix, min_age_seconds, now)
         if f[0] not in processed
     ]
 
@@ -105,14 +103,22 @@ def update_ledger(
     ``processed_at``) replaced atomically: the merged set is written
     to ``ledger.tmp``, fsynced, ``os.replace``d onto ``ledger`` and the
     directory fsynced, so a crash at any point leaves either the old
-    ledger or the new one, never neither."""
-    ids = load_ledger(ledger_path)
-    ids |= {r["file_id"] for r in processed.select("file_id").collect()}
-    stamp = datetime.now(timezone.utc)
+    ledger or the new one, never neither. ``processed_at`` is the
+    commit that first took the id; later commits keep it."""
+    stamps = {}
+    if os.path.exists(ledger_path):
+        old = pq.read_table(ledger_path)
+        stamps = dict(zip(old["file_id"].to_pylist(), old["processed_at"].to_pylist()))
+    now = datetime.now(timezone.utc)
+    for r in processed.select("file_id").collect():
+        stamps.setdefault(r["file_id"], now)
+    ids = sorted(stamps)
     table = pa.table(
         {
-            "file_id": pa.array(sorted(ids), pa.string()),
-            "processed_at": pa.array([stamp] * len(ids), pa.timestamp("us", tz="UTC")),
+            "file_id": pa.array(ids, pa.string()),
+            "processed_at": pa.array(
+                [stamps[i] for i in ids], pa.timestamp("us", tz="UTC")
+            ),
         }
     )
     ledger_dir = os.path.dirname(os.path.abspath(ledger_path))
@@ -128,35 +134,3 @@ def update_ledger(
         os.fsync(fd)
     finally:
         os.close(fd)
-
-
-def incremental_batch(
-    spark: SparkSession,
-    input_dir: str,
-    ledger_path: str,
-    schema: T.StructType,
-    prefix: str = "",
-    min_age_seconds: float = 0.0,
-) -> tuple[DataFrame | None, DataFrame]:
-    """One exactly-once micro-batch over a landing directory.
-
-    Returns ``(data, processed_files)`` where ``data`` is the union of
-    the not-yet-processed, settled files (None if none). Caller commits
-    the batch by passing ``processed_files`` to :func:`update_ledger`
-    AFTER its sinks succeed — same commit ordering as the reference
-    (process first, persist ledger last,
-    drive_auto_compress_email.py:312, :336).
-    """
-    fresh = screen(input_dir, load_ledger(ledger_path), prefix, min_age_seconds)
-    processed = spark.createDataFrame(
-        fresh, "file_id string, path string, mtime double"
-    )
-    if not fresh:
-        return None, processed
-    data = (
-        spark.read.schema(schema)
-        .option("header", True)
-        .csv([path for _id, path, _mtime in fresh])
-        .withColumn("_source_file", F.input_file_name())
-    )
-    return data, processed

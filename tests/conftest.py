@@ -5,7 +5,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest sits in, not whatever else is on sys.path
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _activate_protobuf_shim() -> None:

@@ -71,102 +71,15 @@ def test_empty_dir_yields_empty_frame(spark, tmp_path):
     assert df.count() == 0
 
 
-def test_streaming_listing_exactly_once(spark, tmp_path):
-    """The connector as a STREAMING source: the checkpoint's offset log
-    is the processed-file ledger — file 1 is served once in run 1 and
-    never again; run 2 serves only the newly-landed file."""
-    import os as _os
-    import time as _time
-
-    _register(spark)
-    d = tmp_path / "stream_landing"
-    d.mkdir()
-    ckpt = str(tmp_path / "ls_ckpt")
-    got: list = []
-
-    def run_once():
-        stream = (
-            spark.readStream.format("file_listing")
-            .option("path", str(d))
-            .option("prefix", "loan_")
-            .load()
-        )
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(lambda df, eid: got.extend(df.collect()))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    f1 = d / "loan_a.csv"
-    f1.write_text("id\n1\n")
-    _os.utime(f1, (1000.0, 1000.0))
-    run_once()
-    assert [r.name for r in got] == ["loan_a.csv"]
-
-    f2 = d / "loan_b.csv"
-    f2.write_text("id\n2\n")
-    _os.utime(f2, (2000.0, 2000.0))
-    run_once()
-    assert sorted(r.name for r in got) == ["loan_a.csv", "loan_b.csv"]
-    assert len(got) == 2  # exactly once: loan_a not re-served
-
-
-def test_stream_reader_serves_file_landing_with_older_mtime(tmp_path):
-    """Reader level, no query: a file that lands AFTER a served file but
-    carries an OLDER mtime (moved in from a staging folder) is still
-    served by the next read, and readBetweenOffsets replays exactly the
-    names a batch added to the offset."""
-    import time as _time
-
-    from airflow_loan_etl_pipeline_spark.sources.drive_source import (
-        _ListingStreamReader,
-    )
-
-    d = tmp_path / "landing"
-    d.mkdir()
-    now = _time.time()
-
-    def land(name, age_s):
-        f = d / name
-        f.write_text("id\n1\n")
-        os.utime(f, (now - age_s, now - age_s))
-
-    reader = _ListingStreamReader({"path": str(d), "prefix": "loan_"})
-    start = reader.initialOffset()
-    land("loan_b.csv", 100)
-    rows, off1 = reader.read(start)
-    assert [r[1] for r in rows] == ["loan_b.csv"]
-
-    land("loan_a.csv", 200)
-    rows, off2 = reader.read(off1)
-    assert [r[1] for r in rows] == ["loan_a.csv"]
-    rows, same = reader.read(off2)
-    assert list(rows) == [] and same == off2
-
-    land("loan_c.csv", 300)
-    land("loan_d.csv", 50)
-    _rows, off3 = reader.read(off2)
-    replay = list(reader.readBetweenOffsets(off2, off3))
-    assert sorted(r[1] for r in replay) == ["loan_c.csv", "loan_d.csv"]
-    assert all(r[0] == str(d / r[1]) and r[2] > 0 for r in replay)
-
-
 def test_listing_readers_raise_on_missing_dir(tmp_path):
     """A missing folder is an error, not an empty listing."""
     from airflow_loan_etl_pipeline_spark.sources.drive_source import (
         _ListingReader,
-        _ListingStreamReader,
     )
 
     missing = {"path": str(tmp_path / "missing")}
     with pytest.raises(FileNotFoundError):
         _ListingReader(missing).partitions()
-    with pytest.raises(FileNotFoundError):
-        stream = _ListingStreamReader(missing)
-        stream.read(stream.initialOffset())
 
 
 def _write_drive_fixture(root) -> None:

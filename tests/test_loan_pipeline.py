@@ -238,59 +238,6 @@ def test_send_html_report_over_loopback_smtp():
         srv.close()
 
 
-def test_json_roundtrip_with_quarantine(spark, tmp_path):
-    import json as _json
-
-    from airflow_loan_etl_pipeline_spark.sources import io as io_mod
-    from pyspark.sql import types as T
-
-    p = tmp_path / "j"
-    p.mkdir()
-    (p / "good.json").write_text(
-        "\n".join(
-            _json.dumps({"k": i, "v": f"r{i}"}) for i in range(5)
-        )
-    )
-    (p / "bad.json").write_text('{"k": "notanint", "v": "x"}\n{broken\n')
-    schema = T.StructType(
-        [T.StructField("k", T.LongType()), T.StructField("v", T.StringType())]
-    )
-    df = io_mod.read_json_dir(
-        spark, str(p), schema=schema, keep_corrupt=True
-    )
-    rows = df.collect()
-    assert len(rows) == 7
-    good = [r for r in rows if r.k is not None]
-    assert len(good) == 5
-    corrupt = [r for r in rows if r._corrupt_record is not None]
-    assert len(corrupt) == 2  # type-mismatch row + unparseable row
-
-    out = tmp_path / "out_json"
-    io_mod.write_json(df.drop("_corrupt_record"), str(out), compression="gzip")
-    back = io_mod.read_json_dir(spark, str(out), schema=schema)
-    assert back.count() == 7
-
-
-def test_orc_roundtrip_partitioned(spark, tmp_path):
-    from airflow_loan_etl_pipeline_spark.sources import io as io_mod
-
-    df = spark.createDataFrame(
-        [(1, "a", "x"), (2, "b", "y"), (3, "c", "x")],
-        "k long, v string, part string",
-    )
-    out = str(tmp_path / "orc")
-    io_mod.write_orc(df, out, partition_by=["part"])
-    back = io_mod.read_orc(spark, out)
-    assert sorted((r.k, r.v, r.part) for r in back.collect()) == [
-        (1, "a", "x"),
-        (2, "b", "y"),
-        (3, "c", "x"),
-    ]
-    import os
-
-    assert os.path.isdir(os.path.join(out, "part=x"))
-
-
 def test_payment_schedule_amortizes_to_zero(spark):
     """Closed-form balance must equal the recursive amortization: the
     final month's balance is 0.00 and each month's balance equals
@@ -322,57 +269,6 @@ def test_payment_schedule_amortizes_to_zero(spark):
         # compounds that rounding: |drift| <= 0.005 * ((1+r)^m - 1)/r.
         bound = 0.005 * ((1 + r_m) ** m - 1) / r_m + 0.03
         assert math.isclose(months[m].balance, bal, abs_tol=bound), (m, bal)
-
-
-def test_manifest_roundtrip_and_tamper_detection(spark, tmp_path):
-    from airflow_loan_etl_pipeline_spark.sources.io import (
-        verify_manifest,
-        write_with_manifest,
-    )
-
-    df = spark.createDataFrame(
-        [(i, f"r{i}") for i in range(50)], "k long, v string"
-    )
-    path = str(tmp_path / "release")
-    m = write_with_manifest(df, path)
-    assert m["n_rows"] == 50
-    assert verify_manifest(spark, path) is True
-    # tamper: overwrite with one row changed -> verification fails
-    df2 = spark.createDataFrame(
-        [(i, "X" if i == 7 else f"r{i}") for i in range(50)],
-        "k long, v string",
-    )
-    df2.write.mode("overwrite").parquet(path)
-    import json, os
-
-    # restore the original manifest the overwrite wiped
-    with open(os.path.join(path, "_manifest.json"), "w") as fh:
-        json.dump(m, fh)
-    assert verify_manifest(spark, path) is False
-
-
-def test_manifest_partitioned_pins_partition_column_types(spark, tmp_path):
-    """With partition_by, the partition column round-trips through
-    directory names; the schema-pinned read-back must keep the
-    recorded checksum equal to the LOGICAL input's checksum (a date
-    partition column would otherwise re-infer and re-hash)."""
-    from airflow_loan_etl_pipeline_spark.operators.validate import (
-        table_checksum,
-    )
-    from airflow_loan_etl_pipeline_spark.sources.io import (
-        verify_manifest,
-        write_with_manifest,
-    )
-
-    df = spark.createDataFrame(
-        [(i, f"r{i}") for i in range(40)], "k long, v string"
-    ).selectExpr("k", "v", "date_add(date'2024-01-01', cast(k % 3 as int)) AS d")
-    path = str(tmp_path / "release_part")
-    m = write_with_manifest(df, path, partition_by=["d"])
-    assert m["n_rows"] == 40
-    assert verify_manifest(spark, path) is True
-    logical = table_checksum(df.select("k", "v", "d")).collect()[0]
-    assert m["checksum"] == logical.checksum
 
 
 def test_drive_pipeline_full_dag_equivalent(spark, tmp_path):
@@ -698,6 +594,81 @@ def test_drive_idle_poll_launches_no_spark_job(spark, tmp_path):
     assert idle_jobs == []
 
 
+
+def test_drive_tick_rewritten_ledgered_file_is_not_new(spark, tmp_path):
+    """The totals are the current content of the ledgered files still
+    in the folder. A ledgered file rewritten under the same name is not
+    new: the poll stays idle (no Spark job, no gzip, no summary row),
+    and the next data tick's totals include the rewritten rows."""
+    from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
+        run_drive_pipeline,
+    )
+
+    sc = spark.sparkContext
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    work = str(tmp_path / "work")
+    _write_loans(watch / "loan_a.csv", FILE_A)
+    run_drive_pipeline(spark, str(watch), work)
+    gz = os.path.join(work, "compressed", "loan_a.csv.gz")
+    with open(gz, "rb") as f:
+        gz_before = f.read()
+
+    _write_loans(watch / "loan_a.csv", FILE_A + FILE_B)
+    sc.setJobGroup("drive-tick-rewrite", "drive-tick-rewrite")
+    try:
+        out = run_drive_pipeline(spark, str(watch), work)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert out == ([], None, None)
+    assert sc.statusTracker().getJobIdsForGroup("drive-tick-rewrite") == []
+
+    _write_loans(watch / "loan_c.csv", FILE_C)
+    summaries, aggs, html = run_drive_pipeline(spark, str(watch), work)
+    assert [s["filename"] for s in summaries] == ["loan_c.csv"]
+    assert "loan_a.csv" not in html
+    assert sum(r["loan_count"] for r in aggs.collect()) == (
+        len(FILE_A) + len(FILE_B) + len(FILE_C)
+    )
+    assert sorted(os.listdir(os.path.join(work, "compressed"))) == [
+        "loan_a.csv.gz", "loan_c.csv.gz",
+    ]
+    with open(gz, "rb") as f:
+        assert f.read() == gz_before
+    assert sorted(_ledger_rows(os.path.join(work, "ledger"))) == [
+        "loan_a.csv", "loan_c.csv",
+    ]
+
+
+def test_update_ledger_keeps_first_processed_at(spark, tmp_path, monkeypatch):
+    """``processed_at`` records the commit that first took each id: a
+    later commit stamps only its new ids."""
+    import datetime as dt
+
+    import pyarrow.parquet as pq
+
+    from airflow_loan_etl_pipeline_spark.streaming import file_source
+
+    ledger = str(tmp_path / "ledger")
+    t1 = dt.datetime(2024, 3, 1, 10, 0, tzinfo=dt.timezone.utc)
+    t2 = dt.datetime(2024, 3, 1, 10, 5, tzinfo=dt.timezone.utc)
+
+    def commit(name, stamp):
+        class Clock(dt.datetime):
+            @classmethod
+            def now(cls, tz=None):
+                return stamp
+
+        monkeypatch.setattr(file_source, "datetime", Clock)
+        processed = spark.createDataFrame([(name,)], "file_id string")
+        file_source.update_ledger(spark, ledger, processed)
+
+    commit("a", t1)
+    commit("b", t2)
+    got = pq.read_table(ledger).to_pydict()
+    assert dict(zip(got["file_id"], got["processed_at"])) == {"a": t1, "b": t2}
+
 def test_airflow_dag_builder_gated_on_airflow(tmp_path):
     """build_dag needs Airflow only at call time: importing the module
     never does, and without Airflow installed the call raises the
@@ -717,25 +688,6 @@ def test_airflow_dag_builder_gated_on_airflow(tmp_path):
         "poll_and_process_drive_files", "run_spark_etl",
         "send_summary_email",
     }
-
-
-def test_manifest_checksums_landed_files_not_plan(spark, tmp_path):
-    """write_with_manifest must checksum what LANDED: a
-    nondeterministic frame (unseeded rand) re-executed for the
-    checksum would publish a manifest the snapshot can never verify."""
-    from pyspark.sql import functions as F
-
-    from airflow_loan_etl_pipeline_spark.sources.io import (
-        verify_manifest,
-        write_with_manifest,
-    )
-
-    df = spark.range(100).select(
-        F.col("id"), F.rand().alias("noise")
-    )
-    path = str(tmp_path / "nondet")
-    write_with_manifest(df, path)
-    assert verify_manifest(spark, path) is True
 
 
 def test_engine_parallelism_stock_vs_tuned_session():
@@ -770,7 +722,7 @@ print("OK")
         capture_output=True,
         text=True,
         timeout=240,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "OK" in out.stdout

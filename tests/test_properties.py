@@ -573,51 +573,6 @@ def test_batch_topk_equals_naive_single_window(spark, vecs, k):
 
 @settings(**SETTINGS)
 @given(
-    vals=st.lists(
-        st.integers(min_value=0, max_value=99), min_size=1, max_size=24
-    ),
-    split=st.integers(min_value=0, max_value=24),
-)
-def test_ohlc_merge_equals_oneshot_for_any_split(spark, vals, split):
-    """merge_ohlc(partial(A), partial(B)) == partial(A ∪ B) for ANY
-    split point — the decomposability the streaming fold relies on."""
-    from airflow_loan_etl_pipeline_spark.operators.timeseries import (
-        finalize_ohlc,
-        merge_ohlc,
-        ohlc_bars,
-        ohlc_partial,
-    )
-
-    split = min(split, len(vals))
-    rows = [
-        (i + 1, f"2024-01-01 00:{i % 60:02d}:00", 1, "m", float(v), "")
-        for i, v in enumerate(vals)
-    ]
-    schema = (
-        "event_id long, ts string, user_id long, event_type string,"
-        " value double, props string"
-    )
-
-    def mk(rws):
-        return spark.createDataFrame(rws, schema).withColumn(
-            "ts", F.col("ts").cast("timestamp")
-        )
-
-    key = lambda r: (r.event_type, r.bar_ts)  # noqa: E731
-    val = lambda r: (r.open, r.high, r.low, r.close, r.n_events, r.volume)  # noqa: E731
-    expected = {key(r): val(r) for r in ohlc_bars(mk(rows)).collect()}
-    if split in (0, len(rows)):
-        merged = ohlc_partial(mk(rows))
-    else:
-        merged = merge_ohlc(
-            ohlc_partial(mk(rows[:split])), ohlc_partial(mk(rows[split:]))
-        )
-    got = {key(r): val(r) for r in finalize_ohlc(merged).collect()}
-    assert got == expected
-
-
-@settings(**SETTINGS)
-@given(
     docs=st.lists(
         st.lists(
             st.sampled_from(["a", "b", "c", "d", "e", "f", "g"]),

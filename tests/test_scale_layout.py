@@ -1,20 +1,17 @@
-"""Physical-layout scale features: bucketed joins without shuffles,
-partition pruning on partitioned writes. These assert the LAYOUT pays
-off in the plan — the property that matters at 100 TB."""
+"""Physical-layout scale features: partition pruning on partitioned
+writes and LSH buckets, stream-static enrichment, seeded sampling and
+object-store URIs. The pruning tests assert the LAYOUT pays off in the
+plan — the property that matters at 100 TB."""
 
 from __future__ import annotations
 
 import contextlib
 import io
 
-import pytest
 from pyspark.sql import functions as F
 
 from airflow_loan_etl_pipeline_spark.catalog import load_table
-from airflow_loan_etl_pipeline_spark.sources.io import (
-    write_bucketed,
-    write_parquet,
-)
+from airflow_loan_etl_pipeline_spark.sources.io import write_parquet
 
 
 def _plan(df) -> str:
@@ -22,40 +19,6 @@ def _plan(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-def test_bucketed_join_needs_no_shuffle(spark, sf_dir, tmp_path):
-    # managed tables land in the session's spark-warehouse dir (static
-    # conf, can't point it at tmp_path on a live session); DROP TABLE
-    # below removes the files.
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    write_bucketed(orders, "orders_b", ["o_custkey"], 8, sort_by=["o_custkey"])
-    write_bucketed(
-        customer.withColumnRenamed("c_custkey", "o_custkey"),
-        "customer_b", ["o_custkey"], 8, sort_by=["o_custkey"],
-    )
-    try:
-        # force SMJ so the assertion is about the bucketed layout, not a
-        # broadcast sidestepping the question
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("orders_b").join(
-            spark.table("customer_b"), "o_custkey"
-        )
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        # bucketed scans are already hash-distributed on the key: the
-        # join runs with ZERO exchanges
-        assert "Exchange" not in plan
-        # correctness unchanged vs the plain join
-        n_plain = orders.join(
-            customer, orders.o_custkey == customer.c_custkey
-        ).count()
-        assert joined.count() == n_plain
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS customer_b")
 
 
 def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
@@ -73,23 +36,6 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
     got = scan.count()
     want = orders.filter(F.col("o_year") == 1996).count()
     assert got == want > 0
-
-
-def test_compact_parquet_reduces_file_count(spark, sf_dir, tmp_path):
-    from airflow_loan_etl_pipeline_spark.sources.io import compact_parquet
-
-    src = str(tmp_path / "fragmented")
-    # simulate a poll-per-file ingest: 40 tiny files
-    orders = load_table(spark, sf_dir, "orders")
-    orders.repartition(40).write.mode("overwrite").parquet(src)
-    import glob
-    assert len(glob.glob(src + "/part-*")) == 40
-
-    dest = str(tmp_path / "compacted")
-    n = compact_parquet(spark, src, dest, target_file_mb=64)
-    assert n == 1
-    assert len(glob.glob(dest + "/part-*")) == 1
-    assert spark.read.parquet(dest).count() == orders.count()
 
 
 def test_stream_static_enrichment(spark, sf_dir, tmp_path):
@@ -149,116 +95,6 @@ def test_sampling_reproducible_and_stratified(spark, sf_dir):
             assert abs(got.get(k, 0) / base[k] - f) < 0.15
 
 
-def test_merge_upsert_partitioned_touches_only_affected_partitions(
-    spark, sf_dir, tmp_path
-):
-    from airflow_loan_etl_pipeline_spark.sources.io import merge_upsert
-    import os
-
-    target = str(tmp_path / "orders_merged")
-    orders = load_table(spark, sf_dir, "orders").withColumn(
-        "o_year", F.year("o_orderdate")
-    )
-    merge_upsert(spark, target, orders, ["o_orderkey"], partition_col="o_year")
-    before = spark.read.parquet(target)
-    n_before = before.count()
-    assert n_before == orders.count()
-
-    # mtime snapshot of an untouched partition's files
-    untouched_dir = os.path.join(target, "o_year=1995")
-    mtimes = {
-        f: os.path.getmtime(os.path.join(untouched_dir, f))
-        for f in os.listdir(untouched_dir)
-    }
-
-    # updates: rewrite 5 known 1997 orders with a sentinel price, insert
-    # 2 brand-new keys in 1997
-    some = (
-        before.filter(F.col("o_year") == 1997)
-        .limit(5)
-        .withColumn("o_totalprice", F.lit(999999.0))
-    )
-    new_rows = some.limit(2).withColumn(
-        "o_orderkey", F.col("o_orderkey") + F.lit(10_000_000)
-    )
-    updates = some.unionByName(new_rows)
-    n_parts = merge_upsert(
-        spark, target, updates, ["o_orderkey"], partition_col="o_year"
-    )
-    assert n_parts == 1  # all updates land in o_year=1997
-
-    after = spark.read.parquet(target)
-    assert after.count() == n_before + 2  # upserts replaced, inserts added
-    assert (
-        after.filter(F.col("o_totalprice") == 999999.0).count() == 7
-    )
-    # keys were replaced, not duplicated
-    assert (
-        after.groupBy("o_orderkey").count().filter("count > 1").count() == 0
-    )
-    # untouched partition's files were not rewritten
-    for f, m in mtimes.items():
-        assert os.path.getmtime(os.path.join(untouched_dir, f)) == m
-
-
-def test_merge_upsert_unpartitioned_roundtrip(spark, sf_dir, tmp_path):
-    from airflow_loan_etl_pipeline_spark.sources.io import merge_upsert
-
-    target = str(tmp_path / "cust_merged")
-    customer = load_table(spark, sf_dir, "customer")
-    merge_upsert(spark, target, customer, ["c_custkey"])
-    updates = (
-        customer.limit(3).withColumn("c_acctbal", F.lit(-1.0))
-    )
-    merge_upsert(spark, target, updates, ["c_custkey"])
-    after = spark.read.parquet(target)
-    assert after.count() == customer.count()
-    assert after.filter(F.col("c_acctbal") == -1.0).count() == 3
-
-
-def test_zorder_layout_clusters_both_dimensions(spark, sf_dir, tmp_path):
-    """Z-order vs single-column sort: after clustering lineitem on
-    z(l_orderkey, l_partkey), a selective l_partkey predicate touches a
-    FRACTION of the files; under an l_orderkey-sorted layout the same
-    predicate scatters across (nearly) all files. File-level locality is
-    what parquet min/max pruning exploits at scale."""
-    from airflow_loan_etl_pipeline_spark.sources.io import write_zordered
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    n_files = 16
-
-    plain = str(tmp_path / "plain")
-    (
-        li.repartitionByRange(n_files, "l_orderkey")
-        .sortWithinPartitions("l_orderkey")
-        .write.mode("overwrite")
-        .parquet(plain)
-    )
-    zpath = str(tmp_path / "zord")
-    write_zordered(li, zpath, "l_orderkey", "l_partkey", n_files=n_files)
-
-    # identical contents either way
-    assert spark.read.parquet(zpath).count() == li.count()
-
-    pred = F.col("l_partkey").between(100, 119)  # ~1/10 of the domain
-
-    def files_touched(path: str) -> int:
-        return (
-            spark.read.parquet(path)
-            .filter(pred)
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .count()
-        )
-
-    plain_files = files_touched(plain)
-    z_files = files_touched(zpath)
-    # orderkey-sorted layout scatters the partkey band everywhere;
-    # z-order confines it (sqrt-ish: ~4 of 16 files for a 1/40 band)
-    assert plain_files >= n_files - 2
-    assert z_files <= n_files // 2
-
-
 def test_object_store_uri_scheme_roundtrip(spark, tmp_path):
     """K5: readers/writers take any Hadoop-FS URI. No object store runs
     in this container, so the non-default `file://` scheme stands in for
@@ -283,122 +119,6 @@ def test_object_store_uri_scheme_roundtrip(spark, tmp_path):
     write_parquet(df, uri)
     back = spark.read.parquet(uri)
     assert {(r.k, r.v) for r in back.collect()} == {(1, "a"), (2, "b")}
-
-
-def test_merge_upsert_null_partition_values(spark, tmp_path):
-    # ADVICE r1: rows with a NULL partition column land under
-    # __HIVE_DEFAULT_PARTITION__; the swap must merge them, not silently
-    # drop them.
-    from airflow_loan_etl_pipeline_spark.sources.io import merge_upsert
-
-    target = str(tmp_path / "null_part")
-    base = spark.createDataFrame(
-        [(1, "a", "p1"), (2, "b", None), (3, "c", None)],
-        "k int, v string, p string",
-    )
-    merge_upsert(spark, target, base, ["k"], partition_col="p")
-    updates = spark.createDataFrame(
-        [(2, "B", None), (4, "d", None)], "k int, v string, p string"
-    )
-    merge_upsert(spark, target, updates, ["k"], partition_col="p")
-    after = spark.read.parquet(target)
-    assert after.count() == 4
-    got = {r.k: (r.v, r.p) for r in after.collect()}
-    assert got[2] == ("B", None)  # updated in the NULL partition
-    assert got[4] == ("d", None)  # inserted into the NULL partition
-    assert got[1] == ("a", "p1")  # untouched partition intact
-
-
-def test_merge_upsert_swap_leaves_no_stale_aside(spark, tmp_path):
-    # The aside-swap must clean up: no .__old__ or .__staging__ left.
-    import os
-
-    from airflow_loan_etl_pipeline_spark.sources.io import merge_upsert
-
-    target = str(tmp_path / "swapclean")
-    base = spark.createDataFrame([(1, "a")], "k int, v string")
-    merge_upsert(spark, target, base, ["k"])
-    merge_upsert(
-        spark, target, spark.createDataFrame([(1, "b")], "k int, v string"), ["k"]
-    )
-    siblings = os.listdir(str(tmp_path))
-    assert "swapclean" in siblings
-    assert not [s for s in siblings if "__old__" in s or "__staging__" in s]
-    assert spark.read.parquet(target).collect()[0].v == "b"
-
-
-class _Crash(BaseException):
-    """A process death: not an OSError, so no rollback handler runs."""
-
-
-@pytest.mark.parametrize("partition_col", [None, "p"])
-def test_merge_upsert_survives_crash_inside_swap(
-    spark, tmp_path, monkeypatch, partition_col
-):
-    """Fault injection: the process dies after the target (or its
-    partition) is renamed aside but before staging is renamed in. The
-    retried call must merge into the previous table, not write the
-    updates alone as the whole table."""
-    import os
-
-    from airflow_loan_etl_pipeline_spark.sources.io import merge_upsert
-
-    target = str(tmp_path / "crashy")
-    schema = "k int, v string, p int"
-    base = spark.createDataFrame([(k, "a", k % 2) for k in range(5)], schema)
-    merge_upsert(spark, target, base, ["k"], partition_col=partition_col)
-    update = spark.createDataFrame([(2, "b", 0)], schema)
-
-    real_rename = os.rename
-
-    def rename(src, dst):
-        if ".__staging__" in str(src):
-            raise _Crash()
-        return real_rename(src, dst)
-
-    with monkeypatch.context() as m:
-        m.setattr(os, "rename", rename)
-        with pytest.raises(_Crash):
-            merge_upsert(spark, target, update, ["k"], partition_col=partition_col)
-    merge_upsert(spark, target, update, ["k"], partition_col=partition_col)
-
-    got = {r.k: r.v for r in spark.read.parquet(target).collect()}
-    assert got == {0: "a", 1: "a", 2: "b", 3: "a", 4: "a"}
-    left = os.listdir(tmp_path) + os.listdir(target)
-    assert not [n for n in left if "__old__" in n or "__staging__" in n]
-
-
-def test_write_sorted_ranges_do_not_overlap(spark, sf_dir, tmp_path):
-    """Range-partitioned sorted export: per-file key ranges must be
-    disjoint (binary-searchable listing), rows complete, and the plan
-    must show a RANGE exchange — not a single-partition global sort."""
-    from airflow_loan_etl_pipeline_spark.catalog import load_table
-    from airflow_loan_etl_pipeline_spark.sources.io import write_sorted
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    plan = (
-        li.repartitionByRange(8, "l_orderkey")
-        .sortWithinPartitions("l_orderkey")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "rangepartitioning(l_orderkey" in plan
-    out = str(tmp_path / "sorted")
-    write_sorted(li, out, ["l_orderkey"], num_files=8)
-
-    import pyspark.sql.functions as F
-
-    files = (
-        spark.read.parquet(out)
-        .select(F.input_file_name().alias("f"), "l_orderkey")
-        .groupBy("f")
-        .agg(F.min("l_orderkey").alias("lo"), F.max("l_orderkey").alias("hi"))
-        .orderBy("lo")
-        .collect()
-    )
-    assert len(files) > 1
-    for prev, cur in zip(files, files[1:]):
-        assert prev.hi <= cur.lo
-    assert spark.read.parquet(out).count() == li.count()
 
 
 def test_lsh_bucket_partition_pruning(spark, sf_dir, tmp_path):

@@ -1,5 +1,6 @@
 """Streaming semantics (SURVEY.md §2.9): a real readStream → memory-sink
-drive of the windowed aggregations, and the batch-incremental ledger."""
+drive of the windowed aggregations, the stateful operators, and the
+landing-folder settle gate."""
 
 from __future__ import annotations
 
@@ -10,12 +11,7 @@ import time
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from airflow_loan_etl_pipeline_spark.streaming.file_source import (
-    incremental_batch,
-    load_ledger,
-    settled_files,
-    update_ledger,
-)
+from airflow_loan_etl_pipeline_spark.streaming.file_source import settled_files
 from airflow_loan_etl_pipeline_spark.streaming.windows import tumbling
 
 EVENTS_SCHEMA = T.StructType(
@@ -73,35 +69,6 @@ def _write_csv(path: str, rows: list[str], header: str = "loan_id,amount") -> No
             f.write(r + "\n")
 
 
-def test_incremental_batch_ledger_exactly_once(spark, tmp_path):
-    """ST2/F3: each file is consumed exactly once across polls; a second
-    poll with no new files yields nothing; late files are picked up."""
-    land = str(tmp_path / "landing")
-    ledger = str(tmp_path / "ledger.parquet")
-    os.makedirs(land)
-    schema = T.StructType(
-        [T.StructField("loan_id", T.StringType()), T.StructField("amount", T.DoubleType())]
-    )
-    _write_csv(f"{land}/loan_a.csv", ["L1,100.0", "L2,200.0"])
-
-    data, fresh = incremental_batch(spark, land, ledger, schema, prefix="loan_")
-    assert data is not None and data.count() == 2
-    update_ledger(spark, ledger, fresh)
-
-    # poll 2: nothing new
-    data2, _ = incremental_batch(spark, land, ledger, schema, prefix="loan_")
-    assert data2 is None
-
-    # poll 3: one late file arrives; only it is read (multi-file union SET1
-    # would apply if several arrived)
-    _write_csv(f"{land}/loan_b.csv", ["L3,300.0"])
-    data3, fresh3 = incremental_batch(spark, land, ledger, schema, prefix="loan_")
-    assert data3 is not None and data3.count() == 1
-    assert [r["file_id"] for r in fresh3.collect()] == ["loan_b.csv"]
-    update_ledger(spark, ledger, fresh3)
-    assert len(load_ledger(ledger)) == 2
-
-
 def test_settle_age_gate(spark, tmp_path):
     """F4: files younger than the settle window are not offered."""
     land = str(tmp_path / "landing2")
@@ -114,53 +81,6 @@ def test_settle_age_gate(spark, tmp_path):
     _write_csv(f"{land}/other.csv", ["L9,9.0"])
     got = settled_files(land, prefix="loan_", min_age_seconds=0, now=now)
     assert [file_id for file_id, _path, _mtime in got] == ["loan_new.csv"]
-
-
-def test_streaming_cdc_upsert_sink(spark, tmp_path):
-    """ST6 + merge: foreachBatch drives merge_upsert, turning a CDC
-    file stream into an incrementally-maintained parquet table —
-    exactly-once per batch via the checkpoint, last-writer-wins on the
-    key within the table. The composition a 100 TB ingest pipeline
-    runs continuously (stream in, upsert out), on plain parquet."""
-    import os
-
-    from airflow_loan_etl_pipeline_spark.sources.io import merge_upsert
-
-    land = str(tmp_path / "cdc_in")
-    ckpt = str(tmp_path / "cdc_ckpt")
-    target = str(tmp_path / "cdc_tbl")
-    os.makedirs(land)
-
-    def run_available(spark):
-        stream = (
-            spark.readStream.schema("k int, v string")
-            .option("header", True)
-            .csv(land)
-        )
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(
-                lambda df, eid: merge_upsert(spark, target, df, ["k"])
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    with open(os.path.join(land, "b1.csv"), "w") as f:
-        f.write("k,v\n1,a\n2,b\n")
-    run_available(spark)
-    got = {r.k: r.v for r in spark.read.parquet(target).collect()}
-    assert got == {1: "a", 2: "b"}
-
-    # second batch: update key 2, insert key 3; checkpoint replays only
-    # the NEW file (exactly-once over the stream)
-    with open(os.path.join(land, "b2.csv"), "w") as f:
-        f.write("k,v\n2,B\n3,c\n")
-    run_available(spark)
-    got = {r.k: r.v for r in spark.read.parquet(target).collect()}
-    assert got == {1: "a", 2: "B", 3: "c"}
 
 
 def test_sla_monitoring_batch_and_streaming(spark, tmp_path):
@@ -329,8 +249,7 @@ def test_streaming_kmv_sketch_maintenance(spark, tmp_path):
             merged = kmv_merge(prev.unionByName(sk), k=16)
         else:
             merged = sk
-        # overwrite-into-temp then swap is merge_upsert's job; for the
-        # test a plain overwrite of the tiny state table is enough
+        # a plain overwrite of the tiny state table is enough here
         merged.cache().count()
         merged.write.mode("overwrite").parquet(state)
 
@@ -364,148 +283,6 @@ def test_streaming_kmv_sketch_maintenance(spark, tmp_path):
     )
     expected = {(r.src, r.h) for r in expected_df.collect()}
     assert got == expected
-
-
-def test_telemetry_pipeline_incremental_equals_oneshot(spark, tmp_path):
-    """The composed landing→stream→merge pipeline must produce
-    bit-identical bars to a one-shot ohlc_bars over all events, even
-    when the batch boundary slices through an hour bucket (the
-    decomposability contract of ohlc_partial/merge_ohlc)."""
-    from airflow_loan_etl_pipeline_spark.operators.timeseries import ohlc_bars
-    from airflow_loan_etl_pipeline_spark.plans.telemetry_pipeline import (
-        read_bars,
-        run_telemetry_pipeline,
-    )
-
-    land = tmp_path / "land"
-    land.mkdir()
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-
-    rows = []
-    eid = 0
-    for h in range(3):
-        for m in range(0, 60, 7):
-            eid += 1
-            rows.append(
-                (eid, f"2024-01-01 {h:02d}:{m:02d}:00", 1, "m",
-                 float((eid * 37) % 100), "")
-            )
-    schema = (
-        "event_id long, ts string, user_id long, event_type string,"
-        " value double, props string"
-    )
-
-    def land_batch(batch_rows):
-        df = (
-            spark.createDataFrame(batch_rows, schema)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .drop("props")
-        )
-        df.coalesce(1).write.mode("append").option("header", True).csv(
-            str(land)
-        )
-
-    # split MID-hour: first 10 events, then the rest
-    land_batch(rows[:10])
-    run_telemetry_pipeline(spark, str(land), state, ckpt)
-    land_batch(rows[10:])
-    run_telemetry_pipeline(spark, str(land), state, ckpt)
-
-    all_df = (
-        spark.createDataFrame(rows, schema)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    expected = {
-        (r.event_type, r.bar_ts): (
-            r.open, r.high, r.low, r.close, r.n_events, r.volume
-        )
-        for r in ohlc_bars(all_df).collect()
-    }
-    got = {
-        (r.event_type, r.bar_ts): (
-            r.open, r.high, r.low, r.close, r.n_events, r.volume
-        )
-        for r in read_bars(spark, state).collect()
-    }
-    assert got == expected
-    assert len(got) == 3  # three hour buckets
-
-
-def test_telemetry_fold_is_idempotent_under_replay(spark, tmp_path):
-    """foreachBatch is at-least-once: replaying the SAME epoch must be
-    a no-op (epoch marker travels atomically with the state swap), and
-    a later epoch must still apply."""
-    from airflow_loan_etl_pipeline_spark.plans.telemetry_pipeline import (
-        fold_batch,
-        read_bars,
-    )
-
-    state = str(tmp_path / "state")
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double"
-    )
-    import datetime
-
-    t0 = datetime.datetime(2024, 1, 1, 10, 0, 0)
-    b1 = spark.createDataFrame(
-        [(1, t0, 1, "m", 5.0), (2, t0, 1, "m", 7.0)], schema
-    )
-    assert fold_batch(spark, b1, 0, state) is True
-    first = sorted(read_bars(spark, state).collect())
-    # replay of epoch 0 (same or stale data) must change nothing
-    assert fold_batch(spark, b1, 0, state) is False
-    assert sorted(read_bars(spark, state).collect()) == first
-    assert read_bars(spark, state).collect()[0].n_events == 2
-    # a NEW epoch still applies
-    b2 = spark.createDataFrame([(3, t0, 1, "m", 100.0)], schema)
-    assert fold_batch(spark, b2, 1, state) is True
-    row = read_bars(spark, state).collect()[0]
-    assert row.n_events == 3 and row.high == 100.0
-
-
-class _Crash(BaseException):
-    """A process death: not an OSError, so no rollback handler runs."""
-
-
-def test_telemetry_fold_survives_crash_inside_swap(spark, tmp_path, monkeypatch):
-    """Fault injection: the fold of epoch 1 dies after the state is
-    renamed aside but before staging is renamed in. The retried epoch
-    must fold into the epoch-0 state, not into empty state."""
-    import datetime
-
-    import pytest
-
-    from airflow_loan_etl_pipeline_spark.plans.telemetry_pipeline import (
-        fold_batch,
-        read_bars,
-    )
-
-    state = str(tmp_path / "state")
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double"
-    )
-    t0 = datetime.datetime(2024, 1, 1, 10, 0, 0)
-    b1 = spark.createDataFrame([(1, t0, 1, "m", 5.0), (2, t0, 1, "m", 7.0)], schema)
-    b2 = spark.createDataFrame([(3, t0, 1, "m", 100.0)], schema)
-    assert fold_batch(spark, b1, 0, state) is True
-
-    real_rename = os.rename
-
-    def rename(src, dst):
-        if str(src).endswith(".__staging__"):
-            raise _Crash()
-        return real_rename(src, dst)
-
-    with monkeypatch.context() as m:
-        m.setattr(os, "rename", rename)
-        with pytest.raises(_Crash):
-            fold_batch(spark, b2, 1, state)
-    assert fold_batch(spark, b2, 1, state) is True
-    row = read_bars(spark, state).collect()[0]
-    assert row.n_events == 3 and row.high == 100.0
 
 
 def test_available_now_respects_max_files_per_trigger(spark, tmp_path):
@@ -680,42 +457,15 @@ def _batch_latencies_ms(query) -> list[float]:
 
 
 def test_streaming_per_batch_latency_budget(spark, tmp_path):
-    """Per-batch trigger→commit latency of the two stateful capstones
-    (telemetry OHLC fold, near-dup admission), gated by the budget
-    assertions below: they catch an order-of-magnitude regression (an
-    accidental full-history refold, a per-batch corpus rescan) at test
-    time. Budgets are deliberately generous (test-scale batches run
+    """Per-batch trigger→commit latency of the near-dup admission
+    capstone, gated by the budget assertions below: they catch an
+    order-of-magnitude regression (a per-batch corpus rescan) at test
+    time. The budget is deliberately generous (test-scale batches run
     ~1-4 s; budget 30 s) so host noise cannot flake the gate while a
     10x blowup still fails it."""
-    from airflow_loan_etl_pipeline_spark.plans.telemetry_pipeline import (
-        run_telemetry_pipeline,
-    )
     from airflow_loan_etl_pipeline_spark.streaming.admission import (
         admit_batch,
     )
-
-    land = tmp_path / "land"
-    land.mkdir()
-    rows = [
-        (i, f"2024-01-01 {i % 24:02d}:{(i * 7) % 60:02d}:00", i % 5, "m",
-         float(i % 97))
-        for i in range(200)
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts string, user_id long, event_type string,"
-        " value double",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    df.repartition(4).write.mode("overwrite").option("header", True).csv(
-        str(land)
-    )
-    q = run_telemetry_pipeline(
-        spark, str(land), str(tmp_path / "state"), str(tmp_path / "ckpt"),
-        max_files_per_trigger=2,
-    )
-    lat = _batch_latencies_ms(q)
-    assert len(lat) >= 2, "expected multiple micro-batches"
-    assert max(lat) < 30_000, f"telemetry batch latency blew budget: {lat}"
 
     doc_land = tmp_path / "docs"
     docs = spark.createDataFrame(

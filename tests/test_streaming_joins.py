@@ -143,8 +143,7 @@ def test_interval_join_multibatch_matches_batch(spark, tmp_path):
     trigger (>=3 micro-batches), with matches that span micro-batch
     boundaries — the symmetric-hash state must carry unmatched rows
     across triggers, and the final sink must equal the batch join
-    row-for-row (the same discipline telemetry_pipeline pins for the
-    single-stream path). Event span stays inside the watermark so no
+    row-for-row. Event span stays inside the watermark so no
     row is ever evicted before its match can arrive."""
     lpath, rpath = str(tmp_path / "ml"), str(tmp_path / "mr")
 

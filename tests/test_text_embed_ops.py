@@ -93,22 +93,6 @@ def test_corpus_mix_sample_is_deterministic_and_subset(spark):
     assert full == 200
 
 
-def test_merge_upsert_idempotent(spark, tmp_path):
-    from airflow_loan_etl_pipeline_spark.sources.io import merge_upsert
-
-    target = str(tmp_path / "idem")
-    base = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "k int, v string"
-    )
-    merge_upsert(spark, target, base, ["k"])
-    updates = spark.createDataFrame([(2, "B"), (4, "d")], "k int, v string")
-    merge_upsert(spark, target, updates, ["k"])
-    once = sorted((r.k, r.v) for r in spark.read.parquet(target).collect())
-    merge_upsert(spark, target, updates, ["k"])  # same batch replayed
-    twice = sorted((r.k, r.v) for r in spark.read.parquet(target).collect())
-    assert once == twice == [(1, "a"), (2, "B"), (3, "c"), (4, "d")]
-
-
 def test_batch_cosine_topk_exact_vs_naive(spark):
     import math
     from airflow_loan_etl_pipeline_spark.operators.similarity import (

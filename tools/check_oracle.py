@@ -17,7 +17,8 @@ import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from airflow_loan_etl_pipeline_spark import registry  # noqa: E402
 from airflow_loan_etl_pipeline_spark.catalog import TABLE_NAMES  # noqa: E402

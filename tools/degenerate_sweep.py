@@ -13,11 +13,13 @@ Usage: python tools/degenerate_sweep.py <axis> [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tests"))
 
 from airflow_loan_etl_pipeline_spark import registry  # noqa: E402
 from airflow_loan_etl_pipeline_spark.session import get_spark  # noqa: E402

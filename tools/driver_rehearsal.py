@@ -18,13 +18,15 @@ Usage: python tools/driver_rehearsal.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from airflow_loan_etl_pipeline_spark import registry  # noqa: E402
 from airflow_loan_etl_pipeline_spark.catalog import TABLE_NAMES  # noqa: E402

@@ -26,7 +26,8 @@ import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from airflow_loan_etl_pipeline_spark import registry  # noqa: E402
 from airflow_loan_etl_pipeline_spark.session import get_spark  # noqa: E402
@@ -44,7 +45,7 @@ ap.add_argument("--merge", action="store_true",
 ap.add_argument("queries", nargs="*")
 ARGS = ap.parse_args()
 
-MD_PATH = "/root/repo/SCALESWEEP_100x.md"
+MD_PATH = os.path.join(REPO, "SCALESWEEP_100x.md")
 
 
 def parse_existing_rows(path: str) -> list[dict]:

@@ -26,7 +26,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from airflow_loan_etl_pipeline_spark import registry  # noqa: E402
 from airflow_loan_etl_pipeline_spark.catalog import TABLE_NAMES, load_table  # noqa: E402

@@ -50,7 +50,8 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from airflow_loan_etl_pipeline_spark import registry  # noqa: E402
 import __spark_entry__  # noqa: E402, F401  — loads every registry module
