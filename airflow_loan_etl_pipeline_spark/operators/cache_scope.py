@@ -59,13 +59,13 @@ from pyspark.sql import DataFrame
 # checkpointing truncates lineage, so the work a materialization does
 # (its shuffles, its partitioning, its scans) is invisible in the
 # RESULT plan's explain; this ring keeps it observable for
-# plan-contract tests and the PLANS.md dump. Strings only: holding the
-# frames themselves would keep their RDDs referenced and delay
-# ContextCleaner block cleanup. Capture is OPT-IN: rendering two full
-# explain strings per materialization is pure driver-side diagnostics
-# overhead in production paths, so only the consumers that read the
-# ring (tests/test_plans.py, tools/plan_report.py) switch it on.
-_MATERIALIZATION_PLANS: deque[dict] = deque(maxlen=64)
+# plan-contract tests. Strings only: holding the frames themselves
+# would keep their RDDs referenced and delay ContextCleaner block
+# cleanup. Capture is OPT-IN: rendering a full explain string per
+# materialization is pure driver-side diagnostics overhead in
+# production paths, so only the plan-contract tests, which read the
+# ring, switch it on.
+_MATERIALIZATION_PLANS: deque[str] = deque(maxlen=64)
 _CAPTURE_PLANS = False
 
 
@@ -85,15 +85,11 @@ def clear_materialization_plans() -> None:
     _MATERIALIZATION_PLANS.clear()
 
 
-def recent_materialization_plans(mode: str = "formatted") -> list[str]:
-    """Plans of recently materialized frames, oldest first (empty
-    unless :func:`set_plan_capture` enabled capture).
-
-    ``mode="formatted"`` (default): `explain("formatted")` text —
-    node tree + per-node detail, what the plan-contract tests match
-    on. ``mode="simple"``: `executedPlan().toString()` — the
-    single-string style tools/plan_report.py counts markers on."""
-    return [p[mode] for p in _MATERIALIZATION_PLANS]
+def recent_materialization_plans() -> list[str]:
+    """`explain("formatted")` text (node tree + per-node detail) of
+    recently materialized frames, oldest first; empty unless
+    :func:`set_plan_capture` enabled capture."""
+    return list(_MATERIALIZATION_PLANS)
 
 
 def materialize_consistent(df: DataFrame) -> DataFrame:
@@ -109,14 +105,12 @@ def materialize_consistent(df: DataFrame) -> DataFrame:
     """
     if _CAPTURE_PLANS:
         try:
-            qe = df._jdf.queryExecution()
-            _MATERIALIZATION_PLANS.append({
-                "formatted": qe.explainString(
+            _MATERIALIZATION_PLANS.append(
+                df._jdf.queryExecution().explainString(
                     df._sc._jvm.org.apache.spark.sql.execution.ExplainMode
                     .fromString("formatted")
-                ),
-                "simple": qe.executedPlan().toString(),
-            })
+                )
+            )
         except Exception:  # Connect / API drift — diagnostics only
             pass
     return pin(df, eager=True)

@@ -9,36 +9,8 @@ whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# Format ladder for sloppy timestamp strings, most-specific first. The
-# reference pins spark.sql.legacy.timeParserPolicy=LEGACY globally
-# (loan_spark_etl.py:42), which silently accepts sloppy inputs like
-# '2021-3-7 5:4:3' or '3/7/21'; the engine keeps the CORRECTED parser
-# and offers this explicit, auditable ladder instead — each format is a
-# deliberate choice, not whatever SimpleDateFormat happens to take.
-LENIENT_TS_FORMATS = (
-    "yyyy-MM-dd HH:mm:ss.SSS",
-    "yyyy-MM-dd HH:mm:ss",
-    "yyyy-MM-dd'T'HH:mm:ss",
-    "yyyy-M-d H:m:s",
-    "yyyy-MM-dd",
-    "M/d/yyyy H:m:s",
-    "M/d/yyyy",
-    "M/d/yy",
-)
-
-
-def lenient_to_timestamp(col: Column | str) -> Column:
-    """First successful parse across :data:`LENIENT_TS_FORMATS`
-    (``try_to_timestamp`` never throws — unparseable rows yield NULL,
-    the PERMISSIVE contract). Pure projection, stays in codegen; use on
-    string columns ingested from sources with inconsistent formats."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(
-        *[F.try_to_timestamp(c, F.lit(f)) for f in LENIENT_TS_FORMATS]
-    )
 
 
 def split_datetime(

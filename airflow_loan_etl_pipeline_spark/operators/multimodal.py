@@ -35,12 +35,6 @@ THUMB_SCHEMA = "asset_id long, thumb binary, thumb_width int, thumb_height int"
 FRAME_SCHEMA = "asset_id long, frame_index int, frame binary"
 
 
-_EXT_MEDIA = {
-    "jpg": "image", "jpeg": "image", "png": "image", "gif": "image",
-    "wav": "audio", "mp3": "audio", "flac": "audio",
-    "mp4": "video", "mkv": "video", "webm": "video",
-}
-
 # Real image codec when available (import-guarded: the engine works
 # identically without it, falling back to the deterministic stub).
 try:  # pragma: no cover - depends on container contents
@@ -50,43 +44,6 @@ try:  # pragma: no cover - depends on container contents
 except ImportError:
     _PILImage = None
     HAS_PIL = False
-
-
-def read_binary_assets(spark, path: str, glob: str = "*") -> DataFrame:
-    """Media-file ingest via Spark's ``binaryFile`` source — the engine
-    equivalent of the reference's chunked per-file download to a landing
-    zone (S5, /root/reference/airflow/include/google_drive_download.py:
-    125-147): executors read files in parallel straight from any
-    Hadoop-FS URI, no driver-side copy. Output matches the asset
-    contract consumed by extract_features/resize_images/sample_frames:
-    (asset_id, media_type, payload) + source metadata. ``media_type``
-    is derived from the file extension; unknown extensions map to
-    'unknown' so downstream codecs can route/reject them.
-
-    Scale note: `spark.sql.files.maxPartitionBytes` governs how many
-    files land per task; binaryFile never splits a single file, so
-    payload size bounds task memory.
-    """
-    from pyspark.sql import functions as F
-
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-    ext = F.lower(F.element_at(F.split(F.col("path"), "\\."), -1))
-    media = F.coalesce(
-        *[F.when(ext == k, F.lit(v)) for k, v in _EXT_MEDIA.items()],
-        F.lit("unknown"),
-    )
-    return raw.select(
-        F.xxhash64("path").alias("asset_id"),
-        F.col("path").alias("source_path"),
-        F.col("modificationTime").alias("modified_ts"),
-        F.col("length").alias("n_bytes"),
-        media.alias("media_type"),
-        F.col("content").alias("payload"),
-    )
 
 
 def _decode_payload(media_type: str, payload: bytes) -> dict:

@@ -36,33 +36,6 @@ def check_expectations(
     ).withColumn("passed", F.col("n_violations") == 0)
 
 
-def quarantine_split(
-    df: DataFrame, rules: list[tuple[str, Column]]
-) -> tuple[DataFrame, DataFrame]:
-    """(clean, quarantined): rows failing ANY rule are diverted with a
-    `_failed_rules` array naming what they broke — the row-level
-    companion to :func:`check_expectations` (which only counts).
-    Both outputs share one scan subtree; writing them is two jobs
-    unless the caller persists the input.
-    """
-    tagged = df.withColumn(
-        "_failed_rules",
-        F.array_compact(
-            F.array(
-                *[
-                    F.when(
-                        ~F.coalesce(cond, F.lit(False)), F.lit(name)
-                    )
-                    for name, cond in rules
-                ]
-            )
-        ),
-    )
-    clean = tagged.filter(F.size("_failed_rules") == 0).drop("_failed_rules")
-    bad = tagged.filter(F.size("_failed_rules") > 0)
-    return clean, bad
-
-
 def key_skew_stats(
     df: DataFrame, key_col: str, top: int = 10
 ) -> DataFrame:
@@ -90,21 +63,6 @@ def key_skew_stats(
         )
         .orderBy(F.col("cnt").desc(), F.col(key_col).asc())
         .limit(top)
-    )
-
-
-def partition_stats(df: DataFrame) -> DataFrame:
-    """Physical-partition balance: rows per Spark partition (id, count,
-    share of max). The companion diagnostic to :func:`key_skew_stats` —
-    key skew explains WHY, this shows WHERE the straggler task is."""
-    per = df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count(F.lit(1)).alias("n_rows")
-    )
-    mx = per.agg(F.max("n_rows").alias("max_rows"))
-    return per.crossJoin(F.broadcast(mx)).select(
-        "partition_id",
-        "n_rows",
-        F.round(F.col("n_rows") / F.col("max_rows"), 4).alias("share_of_max"),
     )
 
 

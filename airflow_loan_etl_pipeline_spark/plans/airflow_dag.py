@@ -41,6 +41,13 @@ Semantics notes vs the engine's single-plan form
   polling task, drive_auto_compress_email.py:85-117) — so a mid-DAG
   failure re-runs the ETL over the cumulative ledgered set (idempotent
   overwrite) rather than re-screening files.
+- The compression summary is a pending handoff: task 1 merges its
+  fresh files into it, task 3 reports and then removes it, and a
+  missing handoff reads as no files. Files whose task 1 committed the
+  ledger but whose report was never sent (a crash after the commit, a
+  failed ETL) are therefore reported by the next task 3 that runs.
+  Task 3 mails only when the handoff lists files, as the reference
+  skips its email when nothing is new (:548-550).
 """
 
 from __future__ import annotations
@@ -77,6 +84,14 @@ def _work_paths(work_dir: str) -> dict:
     }
 
 
+def _pending_summaries(path: str) -> list[dict]:
+    """The compression summaries not yet reported ([] when none)."""
+    if not os.path.exists(path):
+        return []
+    with open(path, "r", encoding="utf-8") as f:
+        return json.load(f)
+
+
 def poll_and_process_drive_files(
     spark: SparkSession,
     watch_dir: str,
@@ -88,29 +103,34 @@ def poll_and_process_drive_files(
     """Task 1 (reference :567 ``poll_and_process_drive_files``): screen
     the watched folder by settle age + processed ledger on the driver
     (the single-plan tick's screen), gzip the fresh files on the
-    driver, land the compression summary under ``work_dir`` for the
-    downstream tasks, and commit the ledger."""
+    driver, merge their compression summaries (keyed by ``filename``)
+    into the pending handoff under ``work_dir`` for task 3, and commit
+    the ledger. Returns the pending summaries."""
     paths = _work_paths(work_dir)
     ledger_path = os.path.join(work_dir, "ledger")
     fresh = screen(watch_dir, load_ledger(ledger_path), prefix, min_age_s, now)
     os.makedirs(os.path.dirname(paths["summaries"]), exist_ok=True)
+    pending = _pending_summaries(paths["summaries"])
     if not fresh:
-        with open(paths["summaries"], "w", encoding="utf-8") as f:
-            json.dump([], f)
-        return []
+        return pending
 
-    summaries = compress_fresh(fresh, work_dir)
+    merged = {s["filename"]: s for s in pending}
+    merged.update((s["filename"], s) for s in compress_fresh(fresh, work_dir))
+    pending = list(merged.values())
     # land the handoff BEFORE committing the ledger: a crash between
     # the two then re-processes the files on retry (commit-last replay
-    # safety, same ordering as run_drive_pipeline) — the reverse order
-    # would permanently drop this tick's files from the report
-    with open(paths["summaries"], "w", encoding="utf-8") as f:
-        json.dump(summaries, f)
+    # safety, same ordering as run_drive_pipeline), and the merge keeps
+    # one entry per file. Written aside and renamed, so a crash mid-
+    # write never leaves a torn handoff for the retry to read.
+    tmp = paths["summaries"] + ".tmp"
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(pending, f)
+    os.replace(tmp, paths["summaries"])
     processed = spark.createDataFrame(
         [(name,) for name, _path, _mtime in fresh], "file_id string"
     )
     update_ledger(spark, ledger_path, processed)
-    return summaries
+    return pending
 
 
 def run_spark_etl(
@@ -144,12 +164,15 @@ def send_summary_email(
     smtp: dict | None = None,
 ) -> str:
     """Task 3 (reference :578 ``send_summary_email``): render the HTML
-    summary from task 1's compression summary + task 2's aggregates
-    and (when SMTP settings are provided) deliver it. Always writes
-    the rendered HTML under ``work_dir`` and returns it."""
+    summary from task 1's pending compression summaries + task 2's
+    aggregates, deliver it when SMTP settings are provided and the
+    summaries list at least one file, then remove the handoff. Always
+    writes the rendered HTML under ``work_dir`` and returns it.
+
+    Delivery is at-least-once: a crash between the send and the
+    removal sends the same files again on the next run."""
     paths = _work_paths(work_dir)
-    with open(paths["summaries"], "r", encoding="utf-8") as f:
-        file_summaries = json.load(f)
+    file_summaries = _pending_summaries(paths["summaries"])
     top = None
     if os.path.isdir(paths["aggregates"]):
         aggs = spark.read.parquet(paths["aggregates"])
@@ -157,8 +180,10 @@ def send_summary_email(
     html = render_html_report(file_summaries, top)
     with open(paths["html"], "w", encoding="utf-8") as f:
         f.write(html)
-    if smtp:
-        send_html_report(html, **smtp)
+    if file_summaries:
+        if smtp:
+            send_html_report(html, **smtp)
+        os.remove(paths["summaries"])
     return html
 
 

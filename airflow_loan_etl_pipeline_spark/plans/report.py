@@ -12,16 +12,6 @@ compression metrics come from plans/drive_pipeline.compress_fresh.
 from __future__ import annotations
 
 
-def human_bytes(n: float | int) -> str:
-    """M2: 1024-stepped unit ladder B→PB (driver-side format helper)."""
-    size = float(n)
-    for unit in ("B", "KB", "MB", "GB", "TB"):
-        if abs(size) < 1024.0:
-            return f"{size:.1f} {unit}"
-        size /= 1024.0
-    return f"{size:.1f} PB"
-
-
 def render_html_report(
     file_summaries: list[dict], top_segments: list[dict]
 ) -> str:

@@ -1,5 +1,5 @@
 """Streaming package: the Structured Streaming operators (windows,
-stateful, joins, admission, monitor) and file_source, the landing-folder
+stateful, joins, admission) and file_source, the landing-folder
 screen and processed-ids ledger of the drive tick (a driver-side batch
 protocol, not a stream source).
 

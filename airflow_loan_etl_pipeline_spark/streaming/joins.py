@@ -1,12 +1,12 @@
-"""Stream-stream joins and streaming deduplication (SURVEY.md §2.9
-extensions; the reference's pipeline is batch-only, but its micro-batch
-file stream — drive_auto_compress_email.py:85-111 — is exactly the shape
-these operators serve once two live feeds must be correlated).
+"""Stream-stream joins (SURVEY.md §2.9 extension; the reference's
+pipeline is batch-only, but its micro-batch file stream —
+drive_auto_compress_email.py:85-111 — is exactly the shape this operator
+serves once two live feeds must be correlated).
 
-Both operators are state-store backed: watermarks bound how long a row
-waits for a match (or how long a dedup key is remembered), which is what
-keeps state finite on an unbounded stream — the 100 TB/day design point
-is "state proportional to the watermark window, not to history".
+The join is state-store backed: watermarks bound how long a row waits
+for a match, which is what keeps state finite on an unbounded stream —
+the 100 TB/day design point is "state proportional to the watermark
+window, not to history".
 """
 
 from __future__ import annotations
@@ -48,21 +48,3 @@ def interval_join(
         rw[right_ts].alias(right_ts),
     )
 
-
-def dedup_stream(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact deduplication: keep the first row per key, where
-    "remembered" duplicates are bounded by the watermark —
-    ``dropDuplicatesWithinWatermark`` ages dedup state out once a key's
-    event time falls behind the watermark, so state is O(keys per
-    window) instead of O(keys ever seen). This is the streaming
-    counterpart of operators/dedup.py::exact_dedup for continuous
-    training-data ingestion (batch frames fall back to plain
-    dropDuplicates)."""
-    if not df.isStreaming:
-        return df.dropDuplicates(keys)
-    return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)

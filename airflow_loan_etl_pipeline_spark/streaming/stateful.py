@@ -22,7 +22,6 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 RUNNING_TOTALS_SCHEMA = "user_id bigint, n_events bigint, total_value double"
@@ -60,121 +59,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-SESSION_OUT_SCHEMA = (
-    "user_id bigint, session_start bigint, session_end bigint, "
-    "n_events bigint, total_value double"
-)
-SESSION_STATE_SCHEMA = "start bigint, end bigint, n bigint, total double"
-
-
-def sessionize_with_timeout(
-    events: DataFrame,
-    gap: str = "5 minutes",
-    ts_col: str = "ts",
-    watermark: str = "0 seconds",
-) -> DataFrame:
-    """Per-user sessions closed by EVENT-TIME timeout: a session's
-    summary row is emitted only once no event has arrived for ``gap``
-    of event time — decided by the WATERMARK, not the wall clock, so
-    results are deterministic and replayable (processing-time timeouts
-    depend on when batches happen to run).
-
-    This is the custom-stateful pattern native ``session_window`` can't
-    express once per-session state goes beyond built-in aggregates
-    (quotas, distinct sets, model features): state is (start, end,
-    count, sum) per user; each batch folds its rows in, re-arms the
-    timer at ``last_event + gap``; when the watermark passes the timer,
-    Spark calls the function with ``hasTimedOut`` and the CLOSED
-    session is emitted exactly once (append semantics).
-
-    Timestamps cross the boundary as epoch seconds (bigint) — the
-    contract that avoids engine-local timestamp rendering.
-    """
-    import re as _re
-
-    m = _re.fullmatch(r"(\d+)\s*(second|minute|hour)s?", gap.strip())
-    if not m:
-        raise ValueError(f"unsupported gap: {gap!r}")
-    unit_s = {"second": 1, "minute": 60, "hour": 3600}[m.group(2)]
-    gap_ms = int(m.group(1)) * unit_s * 1000
-
-    def fn(
-        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            start, end, n, total = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "session_start": [start // 1000],
-                    "session_end": [end // 1000],
-                    "n_events": [n],
-                    "total_value": [total],
-                }
-            )
-            return
-        start, end, n, total = (
-            state.get if state.exists else (None, None, 0, 0.0)
-        )
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            ts_ms = (pdf[ts_col].astype("int64") // 1_000_000).to_numpy()
-            lo, hi = int(ts_ms.min()), int(ts_ms.max())
-            start = lo if start is None else min(start, lo)
-            end = hi if end is None else max(end, hi)
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        if start is None:
-            return
-        state.update((start, end, n, total))
-        # Arm the event-time timer; it must sit beyond the current
-        # watermark (Spark rejects timers already in the past).
-        state.setTimeoutTimestamp(
-            max(end + gap_ms, state.getCurrentWatermarkMs() + 1)
-        )
-
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SESSION_OUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def foreach_batch_archive(
-    out_dir: str, summaries: list[dict] | None = None
-):
-    """The reference's compress→archive→report chain (K4/K5/K7,
-    drive_auto_compress_email.py:287-309, :353-517) as a ``foreachBatch``
-    sink: each micro-batch is archived to parquet and a per-batch
-    summary row is recorded at the report edge (collect of ONE row —
-    aggregate metadata, not data).
-
-    Returns a callable for ``.writeStream.foreachBatch(...)``.
-    """
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            batch_df.write.mode("append").parquet(out_dir)
-            if summaries is not None:
-                # count(*) — the reference's per-batch summary metric
-                # (loan_spark_etl.py:118-126); one aggregate row only.
-                row = batch_df.agg(F.count("*").alias("n_rows")).collect()[0]
-                summaries.append({"batch_id": batch_id, "n_rows": row["n_rows"]})
-        finally:
-            batch_df.unpersist()
-
-    return sink
-
-
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
@@ -205,60 +89,3 @@ def production_state_store_confs() -> dict[str, str]:
             "true",
     }
 
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running totals on Spark 4's transformWithState — the
-    successor to applyInPandasWithState (running_user_totals above,
-    same semantics, kept for contrast and for engines pinned to the
-    older API).
-
-    What the new API buys at scale: typed per-key state handles
-    (ValueState/ListState/MapState — no whole-state-tuple rewrites per
-    batch), per-key timers for TTL/session expiry, and schema evolution
-    of state across query restarts. It REQUIRES the RocksDB state store
-    provider (production_state_store_confs()) — which is the right
-    provider at scale anyway.
-
-    Arrow-batched like applyInPandasWithState: rows arrive as pandas
-    DataFrames per key, the fold is vectorized, state I/O is one
-    get/update per key per batch.
-
-    Container caveat: the API's Python driver worker speaks protobuf to
-    the JVM state server; this container lacks ``google.protobuf``, so
-    the accompanying test skips here and runs wherever protobuf is
-    present (any real cluster image ships it).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class Proc(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n_events long, total_value double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = 0, 0.0
-            if self._totals.exists():
-                n, total = self._totals.get()
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        Proc(),
-        outputStructType="user_id long, n_events long, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )

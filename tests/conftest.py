@@ -8,48 +8,6 @@ import pytest
 # the checkout this conftest sits in, not whatever else is on sys.path
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _activate_protobuf_shim() -> None:
-    """Round 10 (VERDICT r9 item 7): make `google.protobuf` importable
-    from the container's gcloud-SDK pure-python copy so the
-    transformWithState test runs instead of env-skipping. Driver side
-    here; worker side via tests/_protobuf_shim/sitecustomize.py on
-    PYTHONPATH — which must be exported BEFORE the SparkSession (and
-    hence the JVM that forks python workers) exists, which is why this
-    runs at conftest import time. No-op when protobuf is installed or
-    the SDK copy is absent."""
-    try:
-        # demand a real module, not a bare namespace hit — Spark worker
-        # paths contain jars whose google/protobuf RESOURCE dirs satisfy
-        # a bare `import google.protobuf` as an empty namespace package
-        # (see tests/_protobuf_shim/sitecustomize.py)
-        from google.protobuf import descriptor  # noqa: F401
-
-        return
-    except Exception:
-        pass
-    shim = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "_protobuf_shim")
-    gae = "/usr/lib/google-cloud-sdk/platform/google_appengine"
-    if not os.path.isdir(os.path.join(gae, "google", "protobuf")):
-        return
-    os.environ["PYTHONPATH"] = (
-        shim + os.pathsep + os.environ.get("PYTHONPATH", "")
-    ).rstrip(os.pathsep)
-    for mod in [m for m in sys.modules if m == "google"
-                or m.startswith("google.")]:
-        del sys.modules[mod]
-    sys.path.append(gae)
-    try:
-        from google.protobuf import runtime_version as _rv
-
-        _rv.ValidateProtobufRuntimeVersion = lambda *a, **k: None
-    except Exception:
-        pass
-
-
-_activate_protobuf_shim()
-
 from airflow_loan_etl_pipeline_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -96,10 +96,9 @@ def test_boolean_and_decimal_columns_filled(spark):
     assert dict(out.dtypes)["m"] == "decimal(10,2)"
 
 
-def test_quarantine_split_diverts_and_names_failures(spark):
+def test_check_expectations_counts_null_as_violation(spark):
     from airflow_loan_etl_pipeline_spark.operators.validate import (
         check_expectations,
-        quarantine_split,
     )
     from pyspark.sql import functions as F
 
@@ -111,14 +110,7 @@ def test_quarantine_split_diverts_and_names_failures(spark):
         ("amount_positive", F.col("amount") > 0),
         ("status_ok", F.col("status") == "OK"),
     ]
-    clean, bad = quarantine_split(df, rules)
-    assert [r.id for r in clean.collect()] == [1]
-    failures = {r.id: sorted(r._failed_rules) for r in bad.collect()}
-    assert failures[2] == ["amount_positive"]
-    assert failures[3] == ["status_ok"]  # NULL status = violation
-    assert failures[4] == ["amount_positive", "status_ok"]
-
     report = {r.rule: r for r in check_expectations(df, rules).collect()}
     assert report["amount_positive"].n_violations == 2
-    assert report["status_ok"].n_violations == 2
+    assert report["status_ok"].n_violations == 2  # NULL status = violation
     assert not report["amount_positive"].passed

@@ -157,16 +157,6 @@ def test_quota_select_deterministic_ties(spark):
     assert got == [("s0", 0), ("s0", 2), ("s1", 1), ("s1", 3)]
 
 
-def test_partition_stats_reports_balance(spark):
-    from airflow_loan_etl_pipeline_spark.operators.validate import partition_stats
-
-    df = spark.range(1000).repartition(4)
-    rows = partition_stats(df).collect()
-    assert sum(r.n_rows for r in rows) == 1000
-    assert len(rows) == 4
-    assert max(r.share_of_max for r in rows) == 1.0
-
-
 def test_table_checksum_order_insensitive_and_content_sensitive(spark):
     from airflow_loan_etl_pipeline_spark.operators.validate import table_checksum
 

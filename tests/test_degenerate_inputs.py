@@ -7,9 +7,8 @@ Every operator family must COMPLETE on such input — returning zero
 or degenerate rows, never crashing in a Python batch stage or an
 ANSI-mode expression.
 
-The full-registry sweep (all 261 queries against both datasets) runs
-out-of-band each round; this suite pins one representative per
-operator family so a regression fails fast in CI. docs_heavy_tokens
+This suite pins one representative per operator family, so a
+regression fails fast in CI. docs_heavy_tokens
 is the historical offender: the Misra-Gries empty candidate batch
 shipped an int64 column for a string key until round 8.
 """
@@ -88,9 +87,8 @@ def _write_transformed(spark, dst: str, transform) -> str:
     return dst
 
 
-# Importable builders (tools/degenerate_sweep.py runs the FULL 261
-# registry against each axis out-of-band; these fixtures reuse them
-# for the fast representative slice in CI).
+# One builder per degenerate axis; the fixtures below run a
+# representative slice of the registry against each.
 
 
 def build_empty(spark, dst: str) -> str:

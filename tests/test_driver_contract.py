@@ -1,87 +1,23 @@
-"""Driver-contract invariants: the prefix-sampling rotation in
-__spark_entry__ (VERDICT r10 item 8)."""
+"""Driver-contract invariants of __spark_entry__: the query and oracle
+maps it exposes, and the registry modules its import loads."""
 
 from __future__ import annotations
-
-import math
 
 import __spark_entry__ as entry
 from airflow_loan_etl_pipeline_spark import registry
 
 
-def test_rotation_covers_every_query_within_cycle(monkeypatch):
-    """Simulated multi-round STALEST-FIRST cycle: each simulated round
-    samples the driver prefix, stamps those entries as externally
-    verified that round, and re-sorts. Every registry entry must be
-    sampled within ceil(rest / step) rounds — nothing ages
-    indefinitely, by construction of the staleness sort."""
-    rewired = [k for k in entry._REWIRED if k in registry.QUERIES]
-    rest_n = len(registry.QUERIES) - len(rewired)
-    step = max(1, entry._DRIVER_SAMPLE - len(rewired))
-    cycle = math.ceil(rest_n / step)
-    assert cycle <= 8, f"rotation cycle {cycle} rounds is too slow"
-    last = dict(entry._last_verified_round())
-    seen: set[str] = set()
-    for rnd in range(100, 100 + cycle):
-        monkeypatch.setattr(entry, "_last_verified_round", lambda: last)
-        prefix = list(entry.queries(round_no=rnd))[: entry._DRIVER_SAMPLE]
-        assert len(prefix) == entry._DRIVER_SAMPLE
-        seen.update(prefix)
-        last = dict(last)
-        for q in prefix:
-            last[q] = rnd
-    assert seen == set(registry.QUERIES)
-
-
-def test_rotation_samples_stalest_cohort_first():
-    """The non-rewired part of the driver's prefix window is drawn from
-    the OLDEST-external-check cohort (VERDICT r11 item 6): no entry
-    outside the window has an older last-verified round than any entry
-    inside it, and never-verified entries (round 0) sort first of
-    all."""
-    rewired = {k for k in entry._REWIRED if k in registry.QUERIES}
-    last = entry._last_verified_round()
-    order = [
-        k
-        for k in entry.queries(round_no=12)
-        if k not in rewired
-    ]
-    window = order[: entry._DRIVER_SAMPLE - len(rewired)]
-    outside = order[entry._DRIVER_SAMPLE - len(rewired):]
-    assert window and outside
-    assert max(last.get(k, 0) for k in window) <= min(
-        last.get(k, 0) for k in outside
-    )
-    # staleness keys are non-decreasing along the whole tail
-    keys = [last.get(k, 0) for k in order]
-    assert keys == sorted(keys)
-
-
-def test_rotation_is_deterministic_and_complete():
-    q1 = entry.queries(round_no=11)
-    q2 = entry.queries(round_no=11)
-    assert list(q1) == list(q2)
-    assert set(q1) == set(registry.QUERIES)
-    # rewired entries hold the front of the sample window
-    rewired = [k for k in entry._REWIRED if k in registry.QUERIES]
-    assert list(q1)[: len(rewired)] == rewired
-    # oracle map mirrors the rotated order
+def test_queries_are_the_registry_sorted_by_name():
+    """``queries()`` is every registry entry, sorted by name, and the
+    same on every call; ``oracle_sql()`` is the ``ORACLE`` subset in the
+    same order."""
+    q = entry.queries()
+    assert list(q) == sorted(registry.QUERIES)
+    assert all(q[k] is registry.QUERIES[k] for k in q)
+    assert list(entry.queries()) == list(q)
     osql = entry.oracle_sql()
-    assert set(osql) == {k for k in q1 if k in registry.ORACLE}
-
-
-def test_current_round_infers_from_artifacts(tmp_path, monkeypatch):
-    import os
-
-    (tmp_path / "CORRECTNESS_r03.json").write_text("{}")
-    (tmp_path / "CORRECTNESS_r10.json").write_text("{}")
-    monkeypatch.setattr(
-        entry.os.path, "dirname", lambda p: str(tmp_path)
-    )
-    assert entry._current_round() == 11
-    for f in tmp_path.iterdir():
-        os.remove(f)
-    assert entry._current_round() == 1
+    assert list(osql) == [k for k in q if k in registry.ORACLE]
+    assert set(osql) == set(registry.ORACLE)
 
 
 def test_entry_import_registers_every_registry_module():

@@ -14,10 +14,7 @@ from airflow_loan_etl_pipeline_spark.plans.loan_etl import (
     clean_and_aggregate,
     latest_aggregates_summary,
 )
-from airflow_loan_etl_pipeline_spark.plans.report import (
-    human_bytes,
-    render_html_report,
-)
+from airflow_loan_etl_pipeline_spark.plans.report import render_html_report
 from airflow_loan_etl_pipeline_spark.sources.io import read_csv_dir, write_parquet
 
 HEADER = (
@@ -94,7 +91,7 @@ def test_loan_etl_end_to_end(spark, tmp_path):
     assert len(top) <= 3
     assert top[0]["loan_count"] == max(r["loan_count"] for r in agg_rows)
     html = render_html_report(
-        [{"file": "loan_a.csv", "ratio": 0.4, "size": human_bytes(2048)}], top
+        [{"file": "loan_a.csv", "ratio": 0.4, "size": "2.0 KB"}], top
     )
     assert "<table>" in html and "2.0 KB" in html
 
@@ -111,24 +108,18 @@ def test_legacy_parser_divergence_documented(spark, tmp_path):
     pins one timestampFormat (io.py) where the reference's global
     LEGACY parser policy (loan_spark_etl.py:42) is fully lenient.
     Strict path: ONLY 'yyyy-MM-dd HH:mm:ss' parses; everything sloppier
-    nulls out (PERMISSIVE). The explicit recovery path is
-    dates.lenient_to_timestamp's format ladder, which accepts the
-    common sloppy shapes LEGACY tolerated."""
+    nulls out (PERMISSIVE)."""
     from pyspark.sql import types as T
 
-    from airflow_loan_etl_pipeline_spark.operators.dates import (
-        lenient_to_timestamp,
-    )
-
     cases = {
-        "iso": "2024-03-01 10:00:00",      # strict: parses
-        "iso_t": "2024-03-01T10:00:00",    # strict: NULL, ladder: parses
-        "date_only": "2024-03-01",         # strict: NULL, ladder: parses
-        "slash_us": "3/7/2021",            # strict: NULL, ladder: parses
-        "slash_2digit": "3/7/21",          # strict: NULL, ladder: parses
-        "single_digit": "2021-3-7 5:4:3",  # strict: NULL, ladder: parses
-        "frac": "2024-03-01 10:00:00.123", # strict: NULL, ladder: parses
-        "garbage": "not a date",           # NULL on both (no silent junk)
+        "iso": "2024-03-01 10:00:00",      # parses
+        "iso_t": "2024-03-01T10:00:00",    # NULL
+        "date_only": "2024-03-01",         # NULL
+        "slash_us": "3/7/2021",            # NULL
+        "slash_2digit": "3/7/21",          # NULL
+        "single_digit": "2021-3-7 5:4:3",  # NULL
+        "frac": "2024-03-01 10:00:00.123", # NULL
+        "garbage": "not a date",           # NULL (no silent junk)
     }
     p = tmp_path / "ts"
     p.mkdir()
@@ -143,22 +134,6 @@ def test_legacy_parser_divergence_documented(spark, tmp_path):
     for k in ("iso_t", "date_only", "slash_us", "slash_2digit",
               "single_digit", "frac", "garbage"):
         assert strict[k] is None, k
-
-    str_schema = T.StructType(
-        [T.StructField("k", T.StringType()), T.StructField("ts", T.StringType())]
-    )
-    raw = read_csv_dir(spark, str(p), schema=str_schema)
-    lenient = {
-        r.k: r.parsed
-        for r in raw.withColumn("parsed", lenient_to_timestamp("ts")).collect()
-    }
-    for k in cases:
-        if k == "garbage":
-            assert lenient[k] is None
-        else:
-            assert lenient[k] is not None, k
-    assert str(lenient["single_digit"]) == "2021-03-07 05:04:03"
-    assert str(lenient["slash_2digit"]).startswith("2021-03-07")
 
 
 def test_read_csv_dir_quarantines_corrupt_rows(spark, tmp_path):
@@ -562,6 +537,93 @@ def test_drive_tick_exactly_once_across_crashes(spark, tmp_path, monkeypatch, po
     assert sorted(map(tuple, aggs.select(*cols).collect())) == sorted(
         map(tuple, ref.select(*cols).collect())
     )
+
+
+def _run_three_tasks(spark, watch, work) -> None:
+    """One minute of the three-task form."""
+    from airflow_loan_etl_pipeline_spark.plans import airflow_dag as ad
+
+    ad.poll_and_process_drive_files(spark, str(watch), work)
+    ad.run_spark_etl(spark, str(watch), work)
+    ad.send_summary_email(spark, work, smtp={"subject": "loans"})
+
+
+@pytest.fixture
+def mails(monkeypatch) -> list[str]:
+    """The reports the three-task form delivers, one HTML string each."""
+    from airflow_loan_etl_pipeline_spark.plans import airflow_dag as ad
+
+    sent: list[str] = []
+    monkeypatch.setattr(ad, "send_html_report", lambda html, **kw: sent.append(html))
+    return sent
+
+
+def _mailed_files(mails: list[str]) -> list[str]:
+    """Every processed-file cell of every delivered report."""
+    import re
+
+    return sorted(
+        name for html in mails
+        for name in re.findall(r"<td>(loan_\w+\.csv)</td>", html)
+    )
+
+
+def test_airflow_dag_idle_minute_sends_no_mail(spark, tmp_path, mails):
+    """The three-task form mails only when task 1 handed over files,
+    as the reference skips its email when nothing is new: an idle
+    minute renders the report but sends nothing, a data minute sends
+    one mail."""
+    from airflow_loan_etl_pipeline_spark.plans import airflow_dag as ad
+
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    work = str(tmp_path / "work")
+
+    _run_three_tasks(spark, watch, work)
+    assert mails == []
+    assert os.path.exists(ad._work_paths(work)["html"])
+
+    _write_loans(watch / "loan_a.csv", FILE_A)
+    _run_three_tasks(spark, watch, work)
+    assert _mailed_files(mails) == ["loan_a.csv"]
+
+    _run_three_tasks(spark, watch, work)
+    assert len(mails) == 1
+
+
+@pytest.mark.parametrize("point", ["before_replace", "after_replace"])
+def test_airflow_dag_exactly_once_across_task1_crash(
+    spark, tmp_path, monkeypatch, mails, point
+):
+    """Fault injection in the three-task form: task 1 crashes inside its
+    ledger commit, before or after the ``os.replace``; task 1 is
+    retried, then tasks 2 and 3 run. Every landed file appears in
+    exactly one delivered report and the ledger holds one row per
+    file."""
+    from airflow_loan_etl_pipeline_spark.plans import airflow_dag as ad
+
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    work = str(tmp_path / "work")
+    ledger_path = os.path.join(work, "ledger")
+
+    _write_loans(watch / "loan_a.csv", FILE_A)
+    _run_three_tasks(spark, watch, work)
+    _write_loans(watch / "loan_b.csv", FILE_B)
+    _write_loans(watch / "loan_c.csv", FILE_C)
+    with monkeypatch.context() as m:
+        _inject_crash(m, point, ledger_path)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            ad.poll_and_process_drive_files(spark, str(watch), work)
+    _run_three_tasks(spark, watch, work)  # the retry
+    _write_loans(watch / "loan_d.csv", FILE_D)
+    _run_three_tasks(spark, watch, work)
+    _run_three_tasks(spark, watch, work)  # idle
+
+    landed = ["loan_a.csv", "loan_b.csv", "loan_c.csv", "loan_d.csv"]
+    assert _mailed_files(mails) == landed
+    assert len(mails) == 3
+    assert sorted(_ledger_rows(ledger_path)) == landed
 
 
 def test_drive_idle_poll_launches_no_spark_job(spark, tmp_path):

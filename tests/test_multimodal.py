@@ -84,31 +84,6 @@ def test_real_png_decode_path(spark):
         assert (feat["width"], feat["height"]) == (again["width"], again["height"])
 
 
-def test_read_binary_assets_ingests_files(spark, tmp_path):
-    """binaryFile ingest (S5 analogue): parallel read, extension-derived
-    media_type, asset contract columns feeding extract_features."""
-    from airflow_loan_etl_pipeline_spark.operators.multimodal import (
-        read_binary_assets,
-    )
-
-    (tmp_path / "a.jpg").write_bytes(b"\xff\xd8JPEGBODY" * 8)
-    (tmp_path / "b.wav").write_bytes(b"RIFFWAVE" * 16)
-    (tmp_path / "c.dat").write_bytes(b"\x00\x01")
-
-    assets = read_binary_assets(spark, str(tmp_path))
-    rows = {r["source_path"].rsplit("/", 1)[-1]: r for r in assets.collect()}
-    assert rows["a.jpg"]["media_type"] == "image"
-    assert rows["b.wav"]["media_type"] == "audio"
-    assert rows["c.dat"]["media_type"] == "unknown"
-    assert rows["a.jpg"]["n_bytes"] == 80
-    assert bytes(rows["b.wav"]["payload"]) == b"RIFFWAVE" * 16
-    # feeds straight into the feature pipeline
-    feats = extract_features(
-        assets.filter(assets.media_type == "image")
-    ).collect()
-    assert len(feats) == 1 and feats[0]["n_bytes"] == 80
-
-
 def test_block_hash_flags_near_identical_payloads(spark):
     """One corrupted block moves ~1 signature bit: the banded hamming
     join must pair the original with its near-copy, identical payloads

@@ -1,14 +1,11 @@
 """Arbitrary stateful streaming: applyInPandasWithState carries per-key
-state ACROSS micro-batches, and foreachBatch drives the archive chain."""
+state ACROSS micro-batches."""
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import functions as F
 
 from airflow_loan_etl_pipeline_spark.streaming.stateful import (
-    foreach_batch_archive,
     running_user_totals,
 )
 
@@ -90,36 +87,6 @@ def test_running_totals_restart_resumes_from_checkpoint(spark, tmp_path):
     assert [(r["n_events"], r["total_value"]) for r in second] == [(2, 5.0)]
 
 
-def test_foreach_batch_archive_chain(spark, tmp_path):
-    """K4/K5/K7 analogue: every micro-batch archived to parquet + one
-    summary row collected at the report edge."""
-    src = str(tmp_path / "src3")
-    out = str(tmp_path / "archive")
-    ckpt = str(tmp_path / "ckpt3")
-    _write_batch(spark, src, [("2024-01-01 00:00:10", 1, 10.0),
-                              ("2024-01-01 00:00:20", 2, 1.0)])
-    _write_batch(spark, src, [("2024-01-01 00:01:10", 3, 5.0)])
-
-    summaries: list[dict] = []
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(foreach_batch_archive(out, summaries))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert sorted(s["n_rows"] for s in summaries) == [1, 2]
-    assert os.path.isdir(out)
-    archived = spark.read.parquet(out)
-    assert archived.count() == 3
-    assert set(r["user_id"] for r in archived.collect()) == {1, 2, 3}
-
-
 def test_running_totals_on_rocksdb_state_store(spark, tmp_path):
     """Same stateful fold on the RocksDB provider (the 100 TB-state
     configuration): results identical to the HDFS-backed default, and
@@ -173,129 +140,3 @@ def test_running_totals_on_rocksdb_state_store(spark, tmp_path):
     metrics = progress["stateOperators"][0]["customMetrics"]
     assert any("rocksdb" in k.lower() for k in metrics), metrics
 
-
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """Spark 4 transformWithState API: same two-batch fold as the
-    applyInPandasWithState test, on its required RocksDB provider —
-    second batch's emission must fold the first batch's state.
-
-    transformWithState's Python driver worker imports google.protobuf
-    (state-server wire protocol). The container ships no protobuf
-    wheel, but conftest + tests/_protobuf_shim expose the gcloud SDK's
-    pure-python copy to the driver AND the JVM-forked workers (round
-    10 — this test ran as an env-skip through round 9). The
-    importorskip remains as the honest guard for environments with
-    neither a protobuf install nor the SDK copy."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState needs protobuf (no install and no "
-               "offline SDK copy to shim from)",
-    )
-    from airflow_loan_etl_pipeline_spark.streaming.stateful import (
-        production_state_store_confs,
-        running_user_totals_tws,
-    )
-
-    src = str(tmp_path / "src_tws")
-    ckpt = str(tmp_path / "ckpt_tws")
-    _write_batch(spark, src, [("2024-01-01 00:00:10", 1, 10.0),
-                              ("2024-01-01 00:00:20", 2, 1.0)])
-    _write_batch(spark, src, [("2024-01-01 00:01:10", 1, 5.0)])
-
-    saved = {
-        k: spark.conf.get(k, None) for k in production_state_store_confs()
-    }
-    for k, v in production_state_store_confs().items():
-        spark.conf.set(k, v)
-    try:
-        stream = (
-            spark.readStream.schema(SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            running_user_totals_tws(stream)
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName("tws_totals")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = spark.sql("SELECT * FROM tws_totals").collect()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-    user1 = [
-        (r["n_events"], r["total_value"]) for r in rows if r["user_id"] == 1
-    ]
-    assert (2, 15.0) in user1, rows
-    assert len(user1) == 2, rows  # one emission per micro-batch
-    assert (1, 1.0) in [
-        (r["n_events"], r["total_value"]) for r in rows if r["user_id"] == 2
-    ]
-
-
-def test_event_time_timeout_sessions_close_deterministically(spark, tmp_path):
-    """Sessions close when the WATERMARK passes last_event + gap —
-    event-time-driven, so the three-run sequence below is fully
-    deterministic: run1 opens user 1's session; run2's 10:30 event
-    advances the watermark past the 10:00:30 + 5min timer; run3 gives
-    Spark the batch in which the fired timeout emits the closed
-    session."""
-    import os
-
-    from airflow_loan_etl_pipeline_spark.streaming.stateful import (
-        sessionize_with_timeout,
-    )
-
-    land = str(tmp_path / "sess_in")
-    ckpt = str(tmp_path / "sess_ckpt")
-    os.makedirs(land)
-    closed: list = []
-
-    def run_once():
-        stream = (
-            spark.readStream.schema("ts timestamp, user_id bigint, value double")
-            .option("header", True)
-            .csv(land)
-        )
-        q = (
-            sessionize_with_timeout(stream, gap="5 minutes")
-            .writeStream.outputMode("append")
-            .foreachBatch(lambda df, eid: closed.extend(df.collect()))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    with open(os.path.join(land, "b1.csv"), "w") as f:
-        f.write(
-            "ts,user_id,value\n"
-            "2024-01-01 10:00:00,1,1.0\n"
-            "2024-01-01 10:00:30,1,2.0\n"
-        )
-    run_once()
-    assert closed == []  # session open, nothing emitted yet
-
-    with open(os.path.join(land, "b2.csv"), "w") as f:
-        f.write("ts,user_id,value\n2024-01-01 10:30:00,2,5.0\n")
-    run_once()  # watermark advances to 10:30 at END of this batch
-
-    with open(os.path.join(land, "b3.csv"), "w") as f:
-        f.write("ts,user_id,value\n2024-01-01 11:00:00,2,1.0\n")
-    run_once()  # timer fired: user 1's closed session emitted
-
-    sessions = {r.user_id: r for r in closed}
-    assert 1 in sessions, f"user 1 session never closed: {closed}"
-    s = sessions[1]
-    assert s.n_events == 2 and s.total_value == 3.0
-    assert s.session_end - s.session_start == 30

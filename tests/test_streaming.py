@@ -83,63 +83,6 @@ def test_settle_age_gate(spark, tmp_path):
     assert [file_id for file_id, _path, _mtime in got] == ["loan_new.csv"]
 
 
-def test_sla_monitoring_batch_and_streaming(spark, tmp_path):
-    """Reference roadmap "Enhance alerts": batch sla_timer fires breach
-    handlers and re-raises failures; QuerySLAListener watches every
-    micro-batch trigger on the session event bus."""
-    import os
-    import time as _time
-
-    import pytest
-
-    from airflow_loan_etl_pipeline_spark.streaming.monitor import (
-        QuerySLAListener,
-        sla_timer,
-    )
-
-    # --- batch: breach fires, result stands
-    breaches = []
-    with sla_timer("slow_job", 0.0, on_breach=lambda n, s: breaches.append((n, s))):
-        _time.sleep(0.01)
-    assert breaches and breaches[0][0] == "slow_job"
-
-    # --- batch: failure handler fires AND the exception propagates
-    fails = []
-    with pytest.raises(ValueError):
-        with sla_timer("bad_job", 10, on_failure=lambda n, e: fails.append(n)):
-            raise ValueError("boom")
-    assert fails == ["bad_job"]
-
-    # --- streaming: per-trigger watchdog (sla=0 -> every trigger breaches)
-    listener = QuerySLAListener(0.0)
-    spark.streams.addListener(listener)
-    try:
-        land = str(tmp_path / "sla_in")
-        os.makedirs(land)
-        with open(os.path.join(land, "a.csv"), "w") as f:
-            f.write("k,v\n1,a\n")
-        q = (
-            spark.readStream.schema("k int, v string")
-            .option("header", True)
-            .csv(land)
-            .writeStream.outputMode("append")
-            .foreachBatch(lambda df, eid: df.count())
-            .option("checkpointLocation", str(tmp_path / "sla_ckpt"))
-            .queryName("sla_probe")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        deadline = _time.time() + 15
-        while not listener.breaches and _time.time() < deadline:
-            _time.sleep(0.2)
-        assert listener.events, "listener saw no trigger progress"
-        assert listener.breaches and listener.breaches[0][0] == "sla_probe"
-        assert not listener.failures
-    finally:
-        spark.streams.removeListener(listener)
-
-
 def test_watermark_drops_late_data(spark, tmp_path):
     """Watermark semantics pinned: an event arriving AFTER the watermark
     has passed its window is DROPPED from the streaming aggregation —
@@ -190,24 +133,6 @@ def test_watermark_drops_late_data(spark, tmp_path):
     assert "10:00" in by_start
     assert by_start["10:00"].total_value == 1.0  # late 100.0 was dropped
     assert "09:30" not in by_start and "09:00" not in by_start
-
-
-def test_observed_metrics_ride_the_action(spark, sf_dir):
-    """df.observe computes audit metrics inside the materializing action
-    — no second pass over the data (the reference re-counted via
-    separate XCom bookkeeping)."""
-    from airflow_loan_etl_pipeline_spark.catalog import load_table
-    from airflow_loan_etl_pipeline_spark.streaming.monitor import (
-        with_quality_observation,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "value")
-    observed, obs = with_quality_observation(ev, "ev_quality", "value")
-    n = observed.count()
-    got = obs.get
-    assert got["n_rows"] == n
-    assert got["n_nulls"] == 0
-    assert abs(got["value_sum"]) > 0
 
 
 def test_streaming_kmv_sketch_maintenance(spark, tmp_path):

@@ -1,14 +1,11 @@
-"""Stream-stream interval join and streaming dedup: results must match
-the batch equivalents, and state must be watermark-bounded."""
+"""Stream-stream interval join: results must match the batch
+equivalent, and state must be watermark-bounded."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from airflow_loan_etl_pipeline_spark.streaming.joins import (
-    dedup_stream,
-    interval_join,
-)
+from airflow_loan_etl_pipeline_spark.streaming.joins import interval_join
 
 L_SCHEMA = "user_id long, l_ts timestamp"
 R_SCHEMA = "user_id long, r_ts timestamp"
@@ -57,39 +54,6 @@ def test_interval_join_stream_matches_batch(spark, tmp_path):
     q.awaitTermination(120)
     got = sorted((r["user_id"], str(r["l_ts"]), str(r["r_ts"])) for r in out)
     assert got == expected
-
-
-def test_dedup_stream_drops_repeats_across_batches(spark, tmp_path):
-    src = str(tmp_path / "src")
-    schema = "event_id long, ts timestamp"
-    _write(spark, src, schema, [(1, "2024-01-01 00:00:01"),
-                                (2, "2024-01-01 00:00:02"),
-                                (1, "2024-01-01 00:00:03")])
-    _write(spark, src, schema, [(2, "2024-01-01 00:00:04"),
-                                (3, "2024-01-01 00:00:05")])
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = []
-    q = (
-        dedup_stream(stream, ["event_id"])
-        .writeStream.outputMode("append")
-        .foreachBatch(lambda df, _id: out.extend(df.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # one row per distinct event_id, duplicates dropped both within and
-    # ACROSS micro-batches (state store carries keys between batches)
-    assert sorted(r["event_id"] for r in out) == [1, 2, 3]
-
-    # batch fallback = plain dropDuplicates
-    batch = dedup_stream(spark.read.parquet(src), ["event_id"])
-    assert batch.count() == 3
 
 
 def test_watermark_drops_late_rows(spark, tmp_path):
@@ -204,40 +168,3 @@ def test_interval_join_multibatch_matches_batch(spark, tmp_path):
     got = sorted((r["user_id"], str(r["l_ts"]), str(r["r_ts"])) for r in out)
     assert got == expected
 
-
-def test_dedup_stream_three_plus_microbatches_matches_batch(spark, tmp_path):
-    """dedup_stream sliced to >=3 micro-batches: keys repeated within a
-    batch, across adjacent batches, and across distant batches all
-    dedup to one survivor; final sink equals the batch fallback."""
-    src = str(tmp_path / "msrc")
-    schema = "event_id long, ts timestamp"
-    _write(spark, src, schema, [(1, "2024-01-01 00:00:01"),
-                                (2, "2024-01-01 00:00:02"),
-                                (1, "2024-01-01 00:00:03")])
-    _write(spark, src, schema, [(2, "2024-01-01 00:00:10"),
-                                (3, "2024-01-01 00:00:11")])
-    _write(spark, src, schema, [(1, "2024-01-01 00:00:20"),
-                                (4, "2024-01-01 00:00:21"),
-                                (3, "2024-01-01 00:00:22")])
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out, n_batches = [], []
-    q = (
-        dedup_stream(stream, ["event_id"])
-        .writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, _id: (out.extend(df.collect()), n_batches.append(1))
-        )
-        .option("checkpointLocation", str(tmp_path / "mckpt2"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(240)
-    assert len(n_batches) >= 3
-    assert sorted(r["event_id"] for r in out) == [1, 2, 3, 4]
-    batch = dedup_stream(spark.read.parquet(src), ["event_id"])
-    assert batch.count() == 4
