@@ -16,11 +16,14 @@ the count aggregation is partial (map-side combine) before the shuffle.
 Tie-break: the reference's winner is nondeterministic under ties
 (loan_spark_etl.py:60-62 orders only by count). We pin (count DESC,
 value ASC) so results are stable and oracle-comparable (SURVEY.md §7
-risk (a)).
+risk (a)). The same rule picks a mode on the driver from value counts
+merged there (:func:`pick_mode`, used by the drive tick's fold).
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -54,6 +57,20 @@ def column_modes(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("column", F.col("value").alias("mode_value"), "cnt")
     )
+
+
+def pick_mode(values: pa.Array, counts: pa.Array) -> str | None:
+    """The mode of ``values`` (strings, as :func:`melt_counts` casts
+    them), each occurrence weighted by its entry in ``counts``: the
+    highest total count, ties to the smallest value (count DESC, value
+    ASC, as :func:`column_modes`). None when no value is non-null.
+    Driver-side, for value counts already collected and merged."""
+    t = pa.table({"value": values, "cnt": counts})
+    t = t.filter(pc.is_valid(t["value"])).group_by("value").aggregate([("cnt", "sum")])
+    if t.num_rows == 0:
+        return None
+    top = t.filter(pc.equal(t["cnt_sum"], pc.max(t["cnt_sum"])))
+    return pc.min(top["value"]).as_py()
 
 
 def fill_nulls_with_mode(df: DataFrame, columns: list[str] | None = None) -> DataFrame:

@@ -3,11 +3,10 @@
 Assets are opaque ``binary`` payloads + typed metadata (schemas.MEDIA).
 The Spark-side machinery — schema contract, Arrow-batched
 ``mapInPandas`` pipelines, batch shaping, partition sizing — is real and
-tested; the actual codec work (image decode, resampling, frame
-extraction) is stubbed behind ``_decode_payload`` with a deterministic
-fake, because media libraries aren't in this container. Swapping the
-fake for PIL/torchaudio/pyav changes ONE function; the distributed plan
-is unchanged.
+tested; the codec work (image and video decode) sits behind
+``_decode_payload``, real for images when Pillow is importable and a
+deterministic fake otherwise. Swapping the fake for PIL/torchaudio/pyav
+changes ONE function; the distributed plan is unchanged.
 
 Scale notes: payloads dominate row width, so these operators
 deliberately run ``mapInPandas`` (streamed Arrow batches, bounded
@@ -29,11 +28,6 @@ FEATURE_SCHEMA = (
     "asset_id long, media_type string, n_bytes int, checksum string, "
     "width int, height int, duration_ms int"
 )
-
-THUMB_SCHEMA = "asset_id long, thumb binary, thumb_width int, thumb_height int"
-
-FRAME_SCHEMA = "asset_id long, frame_index int, frame binary"
-
 
 # Real image codec when available (import-guarded: the engine works
 # identically without it, falling back to the deterministic stub).
@@ -105,79 +99,6 @@ def extract_features(df: DataFrame) -> DataFrame:
             ])
 
     return df.mapInPandas(op, schema=FEATURE_SCHEMA)
-
-
-def resize_images(df: DataFrame, max_side: int = 64) -> DataFrame:
-    """Thumbnail pipeline. With Pillow present the resize is REAL
-    (decode → aspect-preserving downscale → PNG re-encode); without it,
-    a deterministic stub truncates the payload. The Arrow batch
-    contract and output schema are identical either way."""
-
-    def _real_thumb(p) -> tuple[bytes, int, int]:
-        import io as _io
-
-        try:
-            with _PILImage.open(_io.BytesIO(bytes(p))) as img:
-                img.thumbnail((max_side, max_side))
-                buf = _io.BytesIO()
-                img.save(buf, format="PNG")
-                return buf.getvalue(), img.width, img.height
-        except Exception:
-            return b"", 0, 0
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf[pdf["media_type"] == "image"]
-            if HAS_PIL:
-                triples = [
-                    _real_thumb(p) if p is not None else (b"", 0, 0)
-                    for p in pdf["payload"]
-                ]
-                out = pd.DataFrame(
-                    {
-                        "asset_id": pdf["asset_id"].to_numpy(),
-                        "thumb": [t[0] for t in triples],
-                        "thumb_width": [t[1] for t in triples],
-                        "thumb_height": [t[2] for t in triples],
-                    }
-                )
-            else:
-                out = pd.DataFrame(
-                    {
-                        "asset_id": pdf["asset_id"],
-                        "thumb": pdf["payload"].map(
-                            lambda p: bytes(p)[: max_side * max_side] if p is not None else b""
-                        ),
-                        "thumb_width": max_side,
-                        "thumb_height": max_side,
-                    }
-                )
-            yield out[["asset_id", "thumb", "thumb_width", "thumb_height"]]
-
-    return df.mapInPandas(op, schema=THUMB_SCHEMA)
-
-
-def sample_frames(df: DataFrame, every_n_bytes: int = 1024, max_frames: int = 8) -> DataFrame:
-    """Video frame sampling shape: one input row fans out to ≤max_frames
-    rows (mapInPandas may change cardinality — that's the point). STUB
-    frame extraction slices the payload at fixed strides."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf[pdf["media_type"] == "video"].iterrows():
-                payload = bytes(row["payload"]) if row["payload"] is not None else b""
-                for i in range(min(max_frames, max(1, len(payload) // every_n_bytes))):
-                    rows.append(
-                        {
-                            "asset_id": row["asset_id"],
-                            "frame_index": i,
-                            "frame": payload[i * every_n_bytes : (i + 1) * every_n_bytes],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["asset_id", "frame_index", "frame"])
-
-    return df.mapInPandas(op, schema=FRAME_SCHEMA)
 
 
 def block_hash(

@@ -32,8 +32,9 @@ Semantics notes vs the engine's single-plan form
   settled listing minus the ledger, a driver-side set difference, so a
   poll with nothing new launches no Spark job. It gzips the fresh
   files on the driver with the same drive_pipeline.compress_fresh, and
-  its ledger commit is the same atomic file replace
-  (file_source.update_ledger).
+  commits their names with the same atomic file replace
+  (file_source.commit_ledger); the commit is driver-side too, so task 1
+  launches no Spark job at all.
 - The single-plan form updates the processed-file ledger only after
   the whole tick succeeds (strictest replay safety). The three-task
   split necessarily commits the ledger at the end of task 1 — the
@@ -41,6 +42,12 @@ Semantics notes vs the engine's single-plan form
   polling task, drive_auto_compress_email.py:85-117) — so a mid-DAG
   failure re-runs the ETL over the cumulative ledgered set (idempotent
   overwrite) rather than re-screening files.
+- Task 2 computes the totals with the single-plan tick's fold
+  (drive_pipeline.fold_present): it parses only the ledgered files
+  without current partials (the ones task 1 just committed by name,
+  and rewritten ones) and then stores their partials in the ledger.
+  That commit changes no id, so exactly-once is untouched; a crash in
+  it only loses cached partials, which the next task 2 parses again.
 - The compression summary is a pending handoff: task 1 merges its
   fresh files into it, task 3 reports and then removes it, and a
   missing handoff reads as no files. Files whose task 1 committed the
@@ -60,8 +67,8 @@ from datetime import timedelta
 from pyspark.sql import SparkSession
 
 from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
-    aggregate_present,
     compress_fresh,
+    fold_present,
 )
 from airflow_loan_etl_pipeline_spark.plans.loan_etl import latest_aggregates_summary
 from airflow_loan_etl_pipeline_spark.plans.report import (
@@ -70,9 +77,10 @@ from airflow_loan_etl_pipeline_spark.plans.report import (
 )
 from airflow_loan_etl_pipeline_spark.session import get_spark
 from airflow_loan_etl_pipeline_spark.streaming.file_source import (
+    commit_ledger,
     load_ledger,
+    read_ledger,
     screen,
-    update_ledger,
 )
 
 
@@ -105,7 +113,8 @@ def poll_and_process_drive_files(
     (the single-plan tick's screen), gzip the fresh files on the
     driver, merge their compression summaries (keyed by ``filename``)
     into the pending handoff under ``work_dir`` for task 3, and commit
-    the ledger. Returns the pending summaries."""
+    the fresh names to the ledger on the driver (no Spark job; task 2
+    parses them). Returns the pending summaries."""
     paths = _work_paths(work_dir)
     ledger_path = os.path.join(work_dir, "ledger")
     fresh = screen(watch_dir, load_ledger(ledger_path), prefix, min_age_s, now)
@@ -126,10 +135,7 @@ def poll_and_process_drive_files(
     with open(tmp, "w", encoding="utf-8") as f:
         json.dump(pending, f)
     os.replace(tmp, paths["summaries"])
-    processed = spark.createDataFrame(
-        [(name,) for name, _path, _mtime in fresh], "file_id string"
-    )
-    update_ledger(spark, ledger_path, processed)
+    commit_ledger(ledger_path, [name for name, _path, _mtime in fresh])
     return pending
 
 
@@ -141,21 +147,23 @@ def run_spark_etl(
     """Task 2 (reference :573 ``run_spark_etl``): the loan ETL over
     the LEDGERED files still in the folder (never a raw watch-dir glob
     — that would ingest unsettled/mid-copy files task 1 just
-    excluded), aggregates written under ``work_dir``. Returns the
-    aggregate row count. Idempotent: overwrite, so a task retry
+    excluded), aggregates written under ``work_dir``, then the
+    partials of the files it parsed committed to the ledger. Returns
+    the aggregate row count. Idempotent: overwrite, so a task retry
     re-lands the same frame. When none of those files is left it
     removes the previous aggregates and returns 0, so the report does
     not show totals of deleted files."""
     paths = _work_paths(work_dir)
-    aggs = aggregate_present(
-        spark, watch_dir, load_ledger(os.path.join(work_dir, "ledger"))
-    )
+    ledger_path = os.path.join(work_dir, "ledger")
+    aggs, _top, parsed = fold_present(spark, watch_dir, read_ledger(ledger_path), [])
     if aggs is None:
         if os.path.isdir(paths["aggregates"]):
             shutil.rmtree(paths["aggregates"])
         return 0
     aggs.write.mode("overwrite").parquet(paths["aggregates"])
-    return spark.read.parquet(paths["aggregates"]).count()
+    if parsed is not None:
+        commit_ledger(ledger_path, [], parsed)
+    return aggs.count()
 
 
 def send_summary_email(

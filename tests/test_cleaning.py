@@ -9,6 +9,7 @@ from pyspark.sql import types as T
 from airflow_loan_etl_pipeline_spark.operators.cleaning import (
     column_modes,
     fill_nulls_with_mode,
+    pick_mode,
 )
 
 SCHEMA = T.StructType(
@@ -29,6 +30,22 @@ def test_mode_tie_breaks_to_min_value(spark):
     assert modes["s"] == "a"  # tie between a/b -> min value wins
     assert modes["d"] == "1.0"
     assert modes["i"] == "1"
+
+
+def test_pick_mode_sums_counts_and_breaks_ties_like_column_modes():
+    """The driver-side pick over merged value counts: counts of a
+    value add up across entries, nulls are not a value, ties go to the
+    smallest value, and no non-null value means no mode."""
+    import pyarrow as pa
+
+    def mode(values, counts):
+        return pick_mode(pa.array(values, pa.string()), pa.array(counts, pa.int64()))
+
+    assert mode(["b", "a", "b", None], [1, 2, 1, 9]) == "a"  # a:2 b:2 -> a
+    assert mode(["b", "a", "b"], [2, 2, 1]) == "b"
+    assert mode(["10.0", "9.5"], [1, 1]) == "10.0"  # string order, as the melt
+    assert mode([None], [3]) is None
+    assert mode([], []) is None
 
 
 def test_all_null_column_has_no_mode(spark):

@@ -8,6 +8,8 @@ from __future__ import annotations
 import os
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from airflow_loan_etl_pipeline_spark import schemas
 from airflow_loan_etl_pipeline_spark.plans.loan_etl import (
@@ -462,8 +464,9 @@ def test_drive_tick_survives_deleted_ledgered_file(spark, tmp_path):
 
 def _inject_crash(monkeypatch, point: str, ledger_path: str) -> None:
     """Raise inside the next tick at ``point``: after the gzip pass but
-    before the report, after ``ledger.tmp`` is written but before it
-    replaces the ledger, or right after the replace."""
+    before the report, after the partials are computed but before they
+    are folded, after ``ledger.tmp`` is written but before it replaces
+    the ledger, or right after the replace."""
     from airflow_loan_etl_pipeline_spark.plans import drive_pipeline
 
     def crash(*_args, **_kwargs):
@@ -471,6 +474,9 @@ def _inject_crash(monkeypatch, point: str, ledger_path: str) -> None:
 
     if point == "after_gzip":
         monkeypatch.setattr(drive_pipeline, "render_html_report", crash)
+        return
+    if point == "after_partials":
+        monkeypatch.setattr(drive_pipeline, "fold_partials", crash)
         return
     real_replace = os.replace
 
@@ -485,12 +491,16 @@ def _inject_crash(monkeypatch, point: str, ledger_path: str) -> None:
     monkeypatch.setattr(os, "replace", replace)
 
 
-@pytest.mark.parametrize("point", ["after_gzip", "before_replace", "after_replace"])
+@pytest.mark.parametrize(
+    "point", ["after_gzip", "after_partials", "before_replace", "after_replace"]
+)
 def test_drive_tick_exactly_once_across_crashes(spark, tmp_path, monkeypatch, point):
     """Fault injection: a tick that crashes at ``point`` and is then
     re-run commits every file in exactly one tick, the ledger holds one
     row per landed file, each successful tick reports exactly the files
-    it committed, and the final aggregates equal a crash-free run."""
+    it committed, and the final aggregates equal a crash-free run bit
+    for bit: the last tick folds stored partials, the crash-free run
+    parses every file fresh."""
     from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
         run_drive_pipeline,
     )
@@ -591,16 +601,22 @@ def test_airflow_dag_idle_minute_sends_no_mail(spark, tmp_path, mails):
     assert len(mails) == 1
 
 
-@pytest.mark.parametrize("point", ["before_replace", "after_replace"])
+@pytest.mark.parametrize(
+    "point", ["before_replace", "after_replace", "etl_before_replace", "etl_after_replace"]
+)
 def test_airflow_dag_exactly_once_across_task1_crash(
     spark, tmp_path, monkeypatch, mails, point
 ):
     """Fault injection in the three-task form: task 1 crashes inside its
-    ledger commit, before or after the ``os.replace``; task 1 is
-    retried, then tasks 2 and 3 run. Every landed file appears in
-    exactly one delivered report and the ledger holds one row per
-    file."""
+    ledger commit, or task 2 inside its partials commit (``etl_``),
+    before or after the ``os.replace``; the minute is retried. Every
+    landed file appears in exactly one delivered report, the ledger
+    holds one row per file, and the retried minute's aggregates equal
+    a crash-free run's."""
     from airflow_loan_etl_pipeline_spark.plans import airflow_dag as ad
+    from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
+        run_drive_pipeline,
+    )
 
     watch = tmp_path / "watch"
     watch.mkdir()
@@ -612,10 +628,22 @@ def test_airflow_dag_exactly_once_across_task1_crash(
     _write_loans(watch / "loan_b.csv", FILE_B)
     _write_loans(watch / "loan_c.csv", FILE_C)
     with monkeypatch.context() as m:
-        _inject_crash(m, point, ledger_path)
-        with pytest.raises(RuntimeError, match="injected crash"):
+        if point.startswith("etl_"):
             ad.poll_and_process_drive_files(spark, str(watch), work)
+            _inject_crash(m, point[len("etl_"):], ledger_path)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                ad.run_spark_etl(spark, str(watch), work)
+        else:
+            _inject_crash(m, point, ledger_path)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                ad.poll_and_process_drive_files(spark, str(watch), work)
     _run_three_tasks(spark, watch, work)  # the retry
+    task_aggs = spark.read.parquet(ad._work_paths(work)["aggregates"])
+    _s, ref, _h = run_drive_pipeline(spark, str(watch), str(tmp_path / "ref"))
+    cols = sorted(ref.columns)
+    assert sorted(map(tuple, task_aggs.select(*cols).collect())) == sorted(
+        map(tuple, ref.select(*cols).collect())
+    )
     _write_loans(watch / "loan_d.csv", FILE_D)
     _run_three_tasks(spark, watch, work)
     _run_three_tasks(spark, watch, work)  # idle
@@ -701,6 +729,263 @@ def test_drive_tick_rewritten_ledgered_file_is_not_new(spark, tmp_path):
     assert sorted(_ledger_rows(os.path.join(work, "ledger"))) == [
         "loan_a.csv", "loan_c.csv",
     ]
+
+
+def _jobs_of(spark, group: str, fn):
+    """``(fn(), job ids)`` of the Spark jobs ``fn`` ran under ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _record_reads(monkeypatch) -> list[list[str]]:
+    """The file names each ``read_csv_dir`` call of the drive tick reads."""
+    from airflow_loan_etl_pipeline_spark.plans import drive_pipeline
+
+    reads: list[list[str]] = []
+    real = drive_pipeline.read_csv_dir
+
+    def read_csv_dir(spark, path, *args, **kwargs):
+        reads.append(sorted(os.path.basename(p) for p in path))
+        return real(spark, path, *args, **kwargs)
+
+    monkeypatch.setattr(drive_pipeline, "read_csv_dir", read_csv_dir)
+    return reads
+
+
+def _reference_rows(spark, paths: list[str]) -> list[tuple]:
+    """The full recompute the drive tick's fold must equal: the
+    reference ETL over every present file."""
+    loans = read_csv_dir(spark, paths, schema=schemas.LOAN)
+    _cleaned, aggs = clean_and_aggregate(
+        loans, ["status", "product_type", "branch"], "amount", "created_at"
+    )
+    return _sorted_rows(aggs)
+
+
+def _sorted_rows(aggs) -> list[tuple]:
+    cols = ["status", "product_type", "branch", "loan_count", "total_amount"]
+    rows = [tuple(r) for r in aggs.select(*cols).collect()]
+    return sorted(rows, key=lambda r: [(v is not None, v) for v in r[:3]])
+
+
+def _assert_same_totals(got: list[tuple], want: list[tuple]) -> None:
+    """Keys and counts equal; totals equal within 1e-9 relative."""
+    import math
+
+    assert [r[:4] for r in got] == [r[:4] for r in want]
+    for g, w in zip(got, want):
+        assert (g[4] is None) == (w[4] is None), (g, w)
+        if w[4] is not None:
+            assert math.isclose(g[4], w[4], rel_tol=1e-9, abs_tol=1e-9), (g, w)
+
+
+# one CSV row: (status, product_type, branch, amount, tenure_months).
+# Few values per column so modes tie and flip; "" is a null cell;
+# "abc" is a malformed amount (a column the partials read) and "x" a
+# malformed tenure_months (a column they prune).
+_ROW = st.tuples(
+    st.sampled_from(["A", "B", ""]),
+    st.sampled_from(["P", "H", ""]),
+    st.sampled_from(["N", "S", ""]),
+    st.sampled_from(["1.5", "2.0", "10.25", "1e3", "", "abc"]),
+    st.sampled_from(["12", "", "x"]),
+)
+# per tick, what happens to each of 6 file slots: new content (a list
+# of rows; [] is a header-only file), "zero" (a zero-byte file) or
+# "delete"
+_TICKS = st.lists(
+    st.dictionaries(
+        st.integers(0, 5),
+        st.one_of(
+            st.lists(_ROW, max_size=5), st.sampled_from(["zero", "delete"])
+        ),
+        min_size=1,
+        max_size=3,
+    ),
+    min_size=1,
+    max_size=3,
+)
+
+
+@settings(
+    max_examples=30,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@example(ticks=[{0: [("A", "P", "N", "", "12"), ("B", "", "N", "abc", "x")]}])
+@example(
+    ticks=[
+        {0: [("A", "P", "N", "2.0", "12"), ("", "", "", "", "12")]},
+        {1: [("B", "H", "S", "1.5", "12")] * 2, 0: [("", "P", "", "", "x")]},
+        {2: "zero", 1: "delete"},
+    ]
+)
+@given(ticks=_TICKS)
+def test_drive_tick_fold_equals_full_recompute(spark, ticks):
+    """Property: over any sequence of ticks that land, rewrite, empty
+    and delete files, every data tick's aggregates equal the reference
+    ETL over the files then present (counts exactly, totals within
+    1e-9), and the tick reads only files without current partials."""
+    import tempfile
+
+    from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
+        run_drive_pipeline,
+    )
+
+    with tempfile.TemporaryDirectory() as tmp, pytest.MonkeyPatch.context() as mp:
+        reads = _record_reads(mp)
+        watch = os.path.join(tmp, "watch")
+        os.makedirs(watch)
+        work = os.path.join(tmp, "work")
+        stamp = 1_700_000_000 * 10**9
+        changed: set[str] = set()  # written since the last data tick
+        for tick in ticks:
+            for slot, content in sorted(tick.items()):
+                path = os.path.join(watch, f"loan_{slot}.csv")
+                if content == "delete":
+                    if os.path.exists(path):
+                        os.remove(path)
+                    continue
+                with open(path, "w") as f:
+                    if content != "zero":
+                        f.write(HEADER + "\n" + "".join(
+                            f"LN{i},CU1,2024-03-01 10:00:00,{amount},5.5,{tenure},"
+                            f"{status},{product},{branch},GOOD\n"
+                            for i, (status, product, branch, amount, tenure)
+                            in enumerate(content)
+                        ))
+                # every write is a later write, as a real rewrite is
+                stamp += 10**9
+                os.utime(path, ns=(stamp, stamp))
+                changed.add(os.path.basename(path))
+            present = sorted(os.listdir(watch))
+            del reads[:]
+            summaries, aggs, _html = run_drive_pipeline(spark, watch, work)
+            if not summaries:
+                assert aggs is None
+                continue
+            assert reads == [sorted(changed & set(present))]
+            changed.clear()
+            want = _reference_rows(spark, [os.path.join(watch, n) for n in present])
+            _assert_same_totals(_sorted_rows(aggs), want)
+
+
+def test_drive_tick_reads_only_files_without_partials(spark, tmp_path, monkeypatch):
+    """With 5 ledgered files holding partials and 1 fresh file, the
+    data tick parses only the fresh file, in at most 2 Spark jobs (the
+    aggregation's map stage and result)."""
+    from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
+        run_drive_pipeline,
+    )
+
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    work = str(tmp_path / "work")
+    for n, rows in enumerate([FILE_A, FILE_B, FILE_C, FILE_D, FILE_A]):
+        _write_loans(watch / f"loan_{n}.csv", rows)
+    run_drive_pipeline(spark, str(watch), work)
+
+    _write_loans(watch / "loan_5.csv", FILE_B)
+    reads = _record_reads(monkeypatch)
+    (summaries, aggs, _h), jobs = _jobs_of(
+        spark, "drive-tick-incremental",
+        lambda: run_drive_pipeline(spark, str(watch), work),
+    )
+    assert [s["filename"] for s in summaries] == ["loan_5.csv"]
+    assert reads == [["loan_5.csv"]]
+    assert 0 < len(jobs) <= 2
+    want = _reference_rows(spark, sorted(str(p) for p in watch.iterdir()))
+    _assert_same_totals(_sorted_rows(aggs), want)
+
+
+def test_drive_tick_backfills_a_names_only_ledger(spark, tmp_path, monkeypatch):
+    """A ledger of names only (``file_id`` and ``processed_at``, as
+    written before the ledger stored partials): the first data tick
+    parses every present file, stores their partials, and the next
+    tick parses only its fresh file."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
+        run_drive_pipeline,
+    )
+
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    work = tmp_path / "work"
+    work.mkdir()
+    _write_loans(watch / "loan_a.csv", FILE_A)
+    _write_loans(watch / "loan_b.csv", FILE_B)
+    stamp = dt.datetime(2024, 3, 1, tzinfo=dt.timezone.utc)
+    pq.write_table(
+        pa.table({
+            "file_id": pa.array(["loan_a.csv", "loan_b.csv", "loan_gone.csv"]),
+            "processed_at": pa.array([stamp] * 3, pa.timestamp("us", tz="UTC")),
+        }),
+        str(work / "ledger"),
+    )
+    _write_loans(watch / "loan_c.csv", FILE_C)
+    reads = _record_reads(monkeypatch)
+
+    summaries, aggs, _h = run_drive_pipeline(spark, str(watch), str(work))
+
+    assert [s["filename"] for s in summaries] == ["loan_c.csv"]
+    assert reads == [["loan_a.csv", "loan_b.csv", "loan_c.csv"]]
+    want = _reference_rows(spark, sorted(str(p) for p in watch.iterdir()))
+    _assert_same_totals(_sorted_rows(aggs), want)
+    ledger = pq.read_table(str(work / "ledger")).to_pydict()
+    state = dict(zip(ledger["file_id"], zip(ledger["size"], ledger["groups"])))
+    assert state["loan_gone.csv"] == (None, None)
+    for name in ("loan_a.csv", "loan_b.csv", "loan_c.csv"):
+        size, groups = state[name]
+        assert size == (watch / name).stat().st_size
+        assert groups
+    assert dict(zip(ledger["file_id"], ledger["processed_at"]))["loan_a.csv"] == stamp
+
+    _write_loans(watch / "loan_d.csv", FILE_D)
+    run_drive_pipeline(spark, str(watch), str(work))
+    assert reads[-1] == ["loan_d.csv"]
+
+
+def test_drive_tick_attributes_url_encoded_file_names(spark, tmp_path):
+    """Spark reports a file's name URI-encoded (``loan_a b%20c.csv`` as
+    ``loan_a%20b%2520c.csv``); each file's partials still land on its
+    own ledger row."""
+    import pyarrow.parquet as pq
+
+    from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
+        run_drive_pipeline,
+    )
+
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    work = str(tmp_path / "work")
+    _write_loans(watch / "loan_a b%20c.csv", FILE_A)
+    _write_loans(watch / "loan_a b c.csv", FILE_B)
+    _write_loans(watch / "loan_#1.csv", FILE_C)
+
+    _s, aggs, _h = run_drive_pipeline(spark, str(watch), work)
+
+    ledger = pq.read_table(os.path.join(work, "ledger")).to_pydict()
+    rows = {
+        name: sum(g["n"] for g in groups)
+        for name, groups in zip(ledger["file_id"], ledger["groups"])
+    }
+    assert rows == {
+        "loan_a b%20c.csv": len(FILE_A),
+        "loan_a b c.csv": len(FILE_B),
+        "loan_#1.csv": len(FILE_C),
+    }
+    want = _reference_rows(spark, sorted(str(p) for p in watch.iterdir()))
+    _assert_same_totals(_sorted_rows(aggs), want)
 
 
 def test_update_ledger_keeps_first_processed_at(spark, tmp_path, monkeypatch):

@@ -6,11 +6,7 @@ from __future__ import annotations
 import pytest
 
 from airflow_loan_etl_pipeline_spark import schemas
-from airflow_loan_etl_pipeline_spark.operators.multimodal import (
-    extract_features,
-    resize_images,
-    sample_frames,
-)
+from airflow_loan_etl_pipeline_spark.operators.multimodal import extract_features
 
 
 @pytest.fixture()
@@ -34,20 +30,6 @@ def test_extract_features(media):
     # deterministic across runs
     again = {r["asset_id"]: r for r in extract_features(media).collect()}
     assert feats[1]["checksum"] == again[1]["checksum"]
-
-
-def test_resize_images_filters_to_images(media):
-    thumbs = resize_images(media, max_side=8).collect()
-    assert {r["asset_id"] for r in thumbs} == {1, 4}
-    assert all(r["thumb_width"] == 8 for r in thumbs)
-    assert all(len(r["thumb"]) <= 64 for r in thumbs)
-
-
-def test_sample_frames_fans_out(media):
-    frames = sample_frames(media, every_n_bytes=1024, max_frames=4).collect()
-    assert {r["asset_id"] for r in frames} == {3}
-    assert [r["frame_index"] for r in sorted(frames, key=lambda r: r["frame_index"])] == list(range(4))
-    assert all(len(r["frame"]) == 1024 for r in frames)
 
 
 def test_unknown_media_type_raises(spark):
@@ -75,9 +57,6 @@ def test_real_png_decode_path(spark):
     assert feat["n_bytes"] == len(png_1px)
     if HAS_PIL:
         assert (feat["width"], feat["height"]) == (1, 1)
-        thumb = resize_images(df, max_side=8).collect()[0]
-        assert (thumb["thumb_width"], thumb["thumb_height"]) == (1, 1)
-        assert thumb["thumb"].startswith(b"\x89PNG")
     else:
         # deterministic pseudo-dimensions from the payload head
         again = extract_features(df).collect()[0]
