@@ -21,9 +21,13 @@ Design:
   this module never requires Airflow (the engine modules it binds are
   imported at module top).
 - Handoff between tasks goes through ``work_dir`` artifacts (the
-  compression summary JSON, the aggregates parquet), not XCom —
+  compression summary JSON, the aggregates parquet file), not XCom —
   XCom round-trips rows through the scheduler DB, which is the same
-  driver-bottleneck shape the engine removes elsewhere.
+  driver-bottleneck shape the engine removes elsewhere. Both are
+  written on the driver, aside and renamed into place.
+- Spark only parses. Tasks 1 and 3 take no session; task 2 takes a
+  zero-argument session factory and calls it only when a file needs
+  parsing, so a minute with nothing to parse starts no JVM.
 
 Semantics notes vs the engine's single-plan form
 (plans/drive_pipeline.run_drive_pipeline, equivalence-tested):
@@ -45,7 +49,9 @@ Semantics notes vs the engine's single-plan form
 - Task 2 computes the totals with the single-plan tick's fold
   (drive_pipeline.fold_present): it parses only the ledgered files
   without current partials (the ones task 1 just committed by name,
-  and rewritten ones) and then stores their partials in the ledger.
+  and rewritten ones), hands the folded aggregates to task 3 as one
+  parquet file written with pyarrow, and then stores the partials it
+  parsed in the ledger.
   That commit changes no id, so exactly-once is untouched; a crash in
   it only loses cached partials, which the next task 2 parses again.
 - The compression summary is a pending handoff: task 1 merges its
@@ -54,7 +60,9 @@ Semantics notes vs the engine's single-plan form
   ledger but whose report was never sent (a crash after the commit, a
   failed ETL) are therefore reported by the next task 3 that runs.
   Task 3 mails only when the handoff lists files, as the reference
-  skips its email when nothing is new (:548-550).
+  skips its email when nothing is new (:548-550). It ranks the top 10
+  of the aggregates handoff with the single-plan tick's
+  drive_pipeline.top_segments.
 """
 
 from __future__ import annotations
@@ -62,15 +70,17 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Callable
 from datetime import timedelta
 
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
 from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
     compress_fresh,
     fold_present,
+    top_segments,
 )
-from airflow_loan_etl_pipeline_spark.plans.loan_etl import latest_aggregates_summary
 from airflow_loan_etl_pipeline_spark.plans.report import (
     render_html_report,
     send_html_report,
@@ -101,7 +111,6 @@ def _pending_summaries(path: str) -> list[dict]:
 
 
 def poll_and_process_drive_files(
-    spark: SparkSession,
     watch_dir: str,
     work_dir: str,
     prefix: str = "loan_",
@@ -140,34 +149,41 @@ def poll_and_process_drive_files(
 
 
 def run_spark_etl(
-    spark: SparkSession,
+    spark_factory: Callable[[], SparkSession],
     watch_dir: str,
     work_dir: str,
 ) -> int:
     """Task 2 (reference :573 ``run_spark_etl``): the loan ETL over
     the LEDGERED files still in the folder (never a raw watch-dir glob
     — that would ingest unsettled/mid-copy files task 1 just
-    excluded), aggregates written under ``work_dir``, then the
-    partials of the files it parsed committed to the ledger. Returns
-    the aggregate row count. Idempotent: overwrite, so a task retry
-    re-lands the same frame. When none of those files is left it
-    removes the previous aggregates and returns 0, so the report does
-    not show totals of deleted files."""
+    excluded), aggregates written under ``work_dir`` as one parquet
+    file (written aside and renamed into place), then the partials of
+    the files it parsed committed to the ledger. ``spark_factory`` is
+    called only when a file needs parsing. Returns the aggregate row
+    count. Idempotent: a task retry re-lands the same file. When none
+    of those files is left it removes the previous aggregates and
+    returns 0, so the report does not show totals of deleted files."""
     paths = _work_paths(work_dir)
     ledger_path = os.path.join(work_dir, "ledger")
-    aggs, _top, parsed = fold_present(spark, watch_dir, read_ledger(ledger_path), [])
+    aggs, _top, parsed = fold_present(
+        spark_factory, watch_dir, read_ledger(ledger_path), []
+    )
+    out = paths["aggregates"]
+    if os.path.isdir(out):  # a Spark output directory, as earlier versions wrote it
+        shutil.rmtree(out)
     if aggs is None:
-        if os.path.isdir(paths["aggregates"]):
-            shutil.rmtree(paths["aggregates"])
+        if os.path.exists(out):
+            os.remove(out)
         return 0
-    aggs.write.mode("overwrite").parquet(paths["aggregates"])
+    os.makedirs(os.path.dirname(out), exist_ok=True)
+    pq.write_table(aggs, out + ".tmp")
+    os.replace(out + ".tmp", out)
     if parsed is not None:
         commit_ledger(ledger_path, [], parsed)
-    return aggs.count()
+    return aggs.num_rows
 
 
 def send_summary_email(
-    spark: SparkSession,
     work_dir: str,
     smtp: dict | None = None,
 ) -> str:
@@ -182,9 +198,8 @@ def send_summary_email(
     paths = _work_paths(work_dir)
     file_summaries = _pending_summaries(paths["summaries"])
     top = None
-    if os.path.isdir(paths["aggregates"]):
-        aggs = spark.read.parquet(paths["aggregates"])
-        top = latest_aggregates_summary(aggs, limit=10)
+    if os.path.exists(paths["aggregates"]):
+        top = top_segments(pq.read_table(paths["aggregates"]).to_pylist())
     html = render_html_report(file_summaries, top)
     with open(paths["html"], "w", encoding="utf-8") as f:
         f.write(html)
@@ -209,10 +224,13 @@ def build_dag(
     engine's task bodies. Requires Airflow at CALL time only.
 
     ``spark_factory``: zero-arg callable returning the SparkSession
-    each task should use; defaults to the engine's shared
-    ``session.get_spark`` (one JVM per worker process — the reference
-    instead spins a fresh session per task, paying JVM startup
-    thrice)."""
+    task 2 parses with; defaults to the engine's ``session.get_spark``.
+    Only task 2 takes it, and calls it only when a file needs parsing.
+    Under an executor that runs each task instance in a new process
+    (the reference's LocalExecutor), a minute with nothing to parse
+    therefore starts no JVM and a data minute starts one; the
+    reference starts a session in two of its three tasks every
+    minute."""
     try:
         from airflow import DAG
         from airflow.operators.python import PythonOperator
@@ -249,23 +267,18 @@ def build_dag(
             task_id="poll_and_process_drive_files",
             do_xcom_push=False,
             python_callable=lambda: poll_and_process_drive_files(
-                factory(), watch_dir, work_dir,
-                prefix=prefix, min_age_s=min_age_s,
+                watch_dir, work_dir, prefix=prefix, min_age_s=min_age_s,
             ),
         )
         t2 = PythonOperator(
             task_id="run_spark_etl",
             do_xcom_push=False,
-            python_callable=lambda: run_spark_etl(
-                factory(), watch_dir, work_dir
-            ),
+            python_callable=lambda: run_spark_etl(factory, watch_dir, work_dir),
         )
         t3 = PythonOperator(
             task_id="send_summary_email",
             do_xcom_push=False,
-            python_callable=lambda: send_summary_email(
-                factory(), work_dir, smtp=smtp
-            ),
+            python_callable=lambda: send_summary_email(work_dir, smtp=smtp),
         )
         t1 >> t2 >> t3
     return dag

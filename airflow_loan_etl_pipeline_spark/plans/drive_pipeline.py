@@ -46,6 +46,7 @@ from __future__ import annotations
 import gzip
 import math
 import os
+from collections.abc import Callable
 from urllib.parse import unquote
 
 import numpy as np
@@ -190,12 +191,20 @@ def _nulls_first(v):
     return (v is not None, v)
 
 
-def fold_partials(spark: SparkSession, partials: pa.Table) -> tuple[DataFrame, list[dict]]:
-    """The loan aggregates (sorted by the group keys, nulls first) and
-    their top 10 (``latest_aggregates_summary``'s order) from the
-    :data:`PARTIALS` rows of the present files, merged on the driver.
-    The aggregates come back as a local relation: no Spark job builds
-    or collects them."""
+def top_segments(rows: list[dict], limit: int = 10) -> list[dict]:
+    """The first ``limit`` aggregate rows by ``loan_count`` DESC, then
+    the other columns ASC, nulls first: ``latest_aggregates_summary``'s
+    order, ranked on the driver."""
+    return sorted(
+        rows,
+        key=lambda r: (-r["loan_count"], *(_nulls_first(v) for k, v in r.items() if k != "loan_count")),
+    )[:limit]
+
+
+def fold_partials(partials: pa.Table) -> tuple[pa.Table, list[dict]]:
+    """The loan aggregates (:data:`AGGREGATES`, sorted by the group
+    keys, nulls first) and their top 10 (:func:`top_segments`) from the
+    :data:`PARTIALS` rows of the present files, merged on the driver."""
     groups, counts = (
         pa.Table.from_struct_array(pc.list_flatten(partials[c]).combine_chunks())
         for c in ("groups", "amount_counts")
@@ -222,24 +231,23 @@ def fold_partials(spark: SparkSession, partials: pa.Table) -> tuple[DataFrame, l
             {**{c: r[c] for c in GROUP_COLS}, "loan_count": r["n_sum"], "total_amount": total}
         )
     rows.sort(key=lambda r: [_nulls_first(r[c]) for c in GROUP_COLS])
-    top = sorted(
-        rows,
-        key=lambda r: (-r["loan_count"], *(_nulls_first(v) for k, v in r.items() if k != "loan_count")),
-    )[:10]
-    aggs = spark.createDataFrame(pa.Table.from_pylist(rows, schema=AGGREGATES))
-    return aggs, top
+    return pa.Table.from_pylist(rows, schema=AGGREGATES), top_segments(rows)
 
 
 def fold_present(
-    spark: SparkSession, watch_dir: str, ledger: pa.Table | None, fresh: list[str]
-) -> tuple[DataFrame | None, list[dict], pa.Table | None]:
+    spark_factory: Callable[[], SparkSession],
+    watch_dir: str,
+    ledger: pa.Table | None,
+    fresh: list[str],
+) -> tuple[pa.Table | None, list[dict], pa.Table | None]:
     """``(aggregates, top 10, parsed)`` over the ``ledger``'s files
     still in ``watch_dir`` plus the ``fresh`` names. Each is stat-ed;
     the ones without stored partials or whose ``(size, mtime_ns)``
     changed are parsed in one :func:`loan_partials` pass (``parsed``,
     None when there are none), the others keep their ledger partials,
-    and :func:`fold_partials` merges them all. None aggregates when no
-    file is present."""
+    and :func:`fold_partials` merges them all. ``spark_factory`` is
+    called only when a file is parsed. None aggregates when no file is
+    present."""
     ids = ledger["file_id"].to_pylist() if ledger is not None else []
     stored = {}  # file_id -> (ledger row, (size, mtime_ns)) of rows with partials
     if ledger is not None and "groups" in ledger.column_names:
@@ -263,10 +271,10 @@ def fold_present(
     if not keep and not parse:
         return None, [], None
     parts = [ledger.select(PARTIALS.names).take(keep).cast(PARTIALS)] if keep else []
-    parsed = loan_partials(spark, parse) if parse else None
+    parsed = loan_partials(spark_factory(), parse) if parse else None
     if parsed is not None:
         parts.append(parsed)
-    aggs, top = fold_partials(spark, pa.concat_tables(parts))
+    aggs, top = fold_partials(pa.concat_tables(parts))
     return aggs, top, parsed
 
 
@@ -292,10 +300,13 @@ def run_drive_pipeline(
     names = [name for name, _path, _mtime in fresh]
     # ETL input = the SCREENED cumulative set — a raw watch-dir glob
     # would ingest unsettled/mid-copy files the screen just excluded
-    aggs, top, parsed = fold_present(spark, watch_dir, read_ledger(ledger_path), names)
+    aggs, top, parsed = fold_present(
+        lambda: spark, watch_dir, read_ledger(ledger_path), names
+    )
     html = render_html_report(file_summaries, top)
     if smtp:
         send_html_report(html, **smtp)
 
     commit_ledger(ledger_path, names, parsed)
-    return file_summaries, aggs, html
+    # a local relation: no Spark job builds it
+    return file_summaries, None if aggs is None else spark.createDataFrame(aggs), html

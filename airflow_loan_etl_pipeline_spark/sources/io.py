@@ -21,8 +21,13 @@ Reference behaviors re-expressed Spark-first:
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+
+_GLOB_CHAR = re.compile(r"[\\\[\]{}*?]")
 
 
 def read_csv_dir(
@@ -32,7 +37,10 @@ def read_csv_dir(
     keep_corrupt: bool = False,
 ) -> DataFrame:
     """Read every CSV under ``path`` (glob union, SET1; also accepts an
-    explicit path list) with a header row.
+    explicit path list) with a header row. A path string may be a glob;
+    the entries of a list are literal files, so a file named
+    ``loan_[1].csv`` is read as itself (Spark globs every path it is
+    given, so their glob characters are escaped).
 
     Malformed rows: PERMISSIVE mode (cells that fail the schema become
     NULL instead of killing a 100 TB job at row 40-billion-and-one).
@@ -54,6 +62,8 @@ def read_csv_dir(
             [*schema.fields, T.StructField("_corrupt_record", T.StringType())]
         )
         reader = reader.option("columnNameOfCorruptRecord", "_corrupt_record")
+    if not isinstance(path, str):
+        path = [_GLOB_CHAR.sub(r"\\\g<0>", p) for p in path]
     return reader.schema(schema).csv(path)
 
 

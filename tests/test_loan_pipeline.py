@@ -382,11 +382,11 @@ def test_airflow_dag_task_bodies_equivalent_to_single_plan(spark, tmp_path):
 
     # task-split form
     work_t = str(tmp_path / "work_tasks")
-    s1 = ad.poll_and_process_drive_files(spark, str(watch), work_t)
+    s1 = ad.poll_and_process_drive_files(str(watch), work_t)
     assert sorted(s["filename"] for s in s1) == ["loan_a.csv", "loan_b.csv"]
-    n = ad.run_spark_etl(spark, str(watch), work_t)
+    n = ad.run_spark_etl(lambda: spark, str(watch), work_t)
     assert n > 0
-    html_t = ad.send_summary_email(spark, work_t)
+    html_t = ad.send_summary_email(work_t)
     assert "<table>" in html_t and "loan_a.csv" in html_t
 
     # single-plan form on identical input
@@ -405,16 +405,16 @@ def test_airflow_dag_task_bodies_equivalent_to_single_plan(spark, tmp_path):
     assert html_t.replace(work_t, "WORK") == html_s.replace(work_s, "WORK")
 
     # tick 2: no new files -> task 1 returns [], ETL still idempotent
-    assert ad.poll_and_process_drive_files(spark, str(watch), work_t) == []
-    assert ad.run_spark_etl(spark, str(watch), work_t) == n
+    assert ad.poll_and_process_drive_files(str(watch), work_t) == []
+    assert ad.run_spark_etl(lambda: spark, str(watch), work_t) == n
 
     # tick 3: every source file deleted -> no aggregates, and the report
     # must not show the previous tick's totals as current
     for name in ("loan_a.csv", "loan_b.csv"):
         (watch / name).unlink()
-    assert ad.poll_and_process_drive_files(spark, str(watch), work_t) == []
-    assert ad.run_spark_etl(spark, str(watch), work_t) == 0
-    html_3 = ad.send_summary_email(spark, work_t)
+    assert ad.poll_and_process_drive_files(str(watch), work_t) == []
+    assert ad.run_spark_etl(lambda: spark, str(watch), work_t) == 0
+    html_3 = ad.send_summary_email(work_t)
     assert "<h2>Top segments</h2><p>(none)</p>" in html_3
 
 
@@ -553,9 +553,9 @@ def _run_three_tasks(spark, watch, work) -> None:
     """One minute of the three-task form."""
     from airflow_loan_etl_pipeline_spark.plans import airflow_dag as ad
 
-    ad.poll_and_process_drive_files(spark, str(watch), work)
-    ad.run_spark_etl(spark, str(watch), work)
-    ad.send_summary_email(spark, work, smtp={"subject": "loans"})
+    ad.poll_and_process_drive_files(str(watch), work)
+    ad.run_spark_etl(lambda: spark, str(watch), work)
+    ad.send_summary_email(work, smtp={"subject": "loans"})
 
 
 @pytest.fixture
@@ -629,14 +629,14 @@ def test_airflow_dag_exactly_once_across_task1_crash(
     _write_loans(watch / "loan_c.csv", FILE_C)
     with monkeypatch.context() as m:
         if point.startswith("etl_"):
-            ad.poll_and_process_drive_files(spark, str(watch), work)
+            ad.poll_and_process_drive_files(str(watch), work)
             _inject_crash(m, point[len("etl_"):], ledger_path)
             with pytest.raises(RuntimeError, match="injected crash"):
-                ad.run_spark_etl(spark, str(watch), work)
+                ad.run_spark_etl(lambda: spark, str(watch), work)
         else:
             _inject_crash(m, point, ledger_path)
             with pytest.raises(RuntimeError, match="injected crash"):
-                ad.poll_and_process_drive_files(spark, str(watch), work)
+                ad.poll_and_process_drive_files(str(watch), work)
     _run_three_tasks(spark, watch, work)  # the retry
     task_aggs = spark.read.parquet(ad._work_paths(work)["aggregates"])
     _s, ref, _h = run_drive_pipeline(spark, str(watch), str(tmp_path / "ref"))
@@ -652,6 +652,66 @@ def test_airflow_dag_exactly_once_across_task1_crash(
     assert _mailed_files(mails) == landed
     assert len(mails) == 3
     assert sorted(_ledger_rows(ledger_path)) == landed
+
+
+def test_airflow_dag_uses_spark_only_to_parse(spark, tmp_path, mails):
+    """The three-task form asks for a session only when task 2 has a
+    file to parse: a data minute calls the factory once and runs at
+    most 2 Spark jobs, all in task 2; an idle minute and a minute after
+    a file was deleted call it never and run no job."""
+    from airflow_loan_etl_pipeline_spark.plans import airflow_dag as ad
+
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    work = str(tmp_path / "work")
+    calls = []
+
+    def factory():
+        calls.append(1)
+        return spark
+
+    def minute(label):
+        del calls[:]
+        tasks = [
+            lambda: ad.poll_and_process_drive_files(str(watch), work),
+            lambda: ad.run_spark_etl(factory, str(watch), work),
+            lambda: ad.send_summary_email(work, smtp={"subject": "loans"}),
+        ]
+        jobs = [len(_jobs_of(spark, f"three-task-{label}-{i}", t)[1]) for i, t in enumerate(tasks)]
+        return len(calls), jobs
+
+    _write_loans(watch / "loan_a.csv", FILE_A)
+    _write_loans(watch / "loan_b.csv", FILE_B)
+    n_calls, (t1, t2, t3) = minute("data")
+    assert n_calls == 1
+    assert t1 == t3 == 0 and 0 < t2 <= 2
+    assert minute("idle") == (0, [0, 0, 0])
+    (watch / "loan_a.csv").unlink()
+    assert minute("deleted") == (0, [0, 0, 0])
+    assert _mailed_files(mails) == ["loan_a.csv", "loan_b.csv"]
+
+
+def test_top_segments_ranks_like_latest_aggregates_summary(spark):
+    """The driver-side top 10 of the tick orders rows as the Spark
+    report query does: loan_count DESC, then the other columns ASC with
+    nulls first."""
+    from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import top_segments
+
+    rows = [
+        {"status": s, "product_type": p, "branch": b, "loan_count": n, "total_amount": t}
+        for s, p, b, n, t in [
+            ("A", "P", "N", 3, 10.0), (None, "P", "N", 3, 1.0), ("A", None, "N", 3, 2.0),
+            ("A", "P", None, 5, None), ("A", "P", "S", 3, None), ("B", "H", "N", 1, 4.0),
+            ("A", "P", "N", 3, 9.5), ("B", "H", "N", 1, None),
+        ]
+    ]
+    aggs = spark.createDataFrame(
+        [tuple(r.values()) for r in rows],
+        "status string, product_type string, branch string, loan_count bigint, "
+        "total_amount double",
+    )
+    for limit in (3, 10):
+        assert top_segments(rows, limit) == latest_aggregates_summary(aggs, limit=limit)
 
 
 def test_drive_idle_poll_launches_no_spark_job(spark, tmp_path):
@@ -986,6 +1046,32 @@ def test_drive_tick_attributes_url_encoded_file_names(spark, tmp_path):
     }
     want = _reference_rows(spark, sorted(str(p) for p in watch.iterdir()))
     _assert_same_totals(_sorted_rows(aggs), want)
+
+
+def test_drive_tick_reads_file_names_holding_glob_characters(spark, tmp_path):
+    """Landed files named ``loan_[1].csv`` and ``loan_{x}.csv`` are
+    read as themselves: the tick commits both with their totals and the
+    next tick is idle (Spark globbed their paths and failed every data
+    tick with PATH_NOT_FOUND before the ledger commit)."""
+    from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
+        run_drive_pipeline,
+    )
+
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    work = str(tmp_path / "work")
+    _write_loans(watch / "loan_[1].csv", FILE_A)
+    _write_loans(watch / "loan_{x}.csv", FILE_B)
+
+    summaries, aggs, _h = run_drive_pipeline(spark, str(watch), work)
+
+    landed = ["loan_[1].csv", "loan_{x}.csv"]
+    assert sorted(s["filename"] for s in summaries) == landed
+    assert sorted(_ledger_rows(os.path.join(work, "ledger"))) == landed
+    assert sum(r["loan_count"] for r in aggs.collect()) == len(FILE_A) + len(FILE_B)
+    want = _reference_rows(spark, sorted(str(p) for p in watch.iterdir()))
+    _assert_same_totals(_sorted_rows(aggs), want)
+    assert run_drive_pipeline(spark, str(watch), work) == ([], None, None)
 
 
 def test_update_ledger_keeps_first_processed_at(spark, tmp_path, monkeypatch):
