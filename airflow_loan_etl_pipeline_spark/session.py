@@ -27,11 +27,6 @@ from pyspark.sql import SparkSession
 
 logger = logging.getLogger(__name__)
 
-# Upper bound for shuffle parallelism; AQE coalesces downward at runtime.
-# Local default: ~cores. On a real cluster this should be set to
-# ~2-3x total executor cores (e.g. 2000+ for a 1000-executor job).
-_DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
 
 def _default_driver_memory() -> str:
     """Half of host memory, at most 48g (48g without /proc/meminfo)."""
@@ -54,15 +49,15 @@ def get_spark(
     One session per process — the reference builds a fresh session per
     entry point (loan_spark_etl.py:134-189 and :192-220), paying JVM
     startup twice; ``getOrCreate`` makes this idempotent.
+
+    The master and the shuffle width (AQE's upper bound) each come
+    from the argument, else ``SPARK_GRAFT_CPUS`` (``local[n]``, ``n``),
+    else the submitted conf, else Spark's ``local[*]`` and one
+    partition per CPU this process may use.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or _DEFAULT_SHUFFLE_PARTITIONS),
-        )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -103,10 +98,22 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"),
         )
     )
+    if master or cpus:
+        builder = builder.master(master or f"local[{cpus}]")
+    if shuffle_partitions or cpus:
+        builder = builder.config(
+            "spark.sql.shuffle.partitions", str(shuffle_partitions or cpus)
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    # the context's conf holds what was submitted or set above
+    if not sc.getConf().contains("spark.sql.shuffle.partitions"):
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(len(os.sched_getaffinity(0)))
+        )
+    sc.setLogLevel("WARN")
     return spark
 
 
@@ -123,8 +130,9 @@ def engine_parallelism(spark: SparkSession) -> int:
     1000-executor job) — under dynamic allocation defaultParallelism
     can reflect only the executors alive at call time, so taking the
     max keeps the numbered exchanges as wide as the tuned shuffle
-    width. On local[32] with the session default both are 32, so local
-    plans are unchanged.
+    width. On a local session built by :func:`get_spark` both equal
+    the CPU count (``local[n]`` and ``n`` partitions), so local plans
+    are unchanged.
 
     shuffle.partitions only participates when it was EXPLICITLY SET
     (builder conf, spark-defaults, or runtime ``spark.conf.set``) —

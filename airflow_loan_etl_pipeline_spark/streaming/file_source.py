@@ -5,9 +5,9 @@ poll, a persisted JSON ledger of processed file IDs, and a 60-second
 minimum file age so in-flight uploads aren't consumed
 (/root/reference/airflow/dags/drive_auto_compress_email.py:582, :85-111,
 :71, :227-236). This module is the one place that decides which landed
-files are new: :func:`settled_files` lists the folder (F2/F4) and
-:func:`screen` removes the names already processed (F3, :184, :207) —
-the reference's own Python set difference, on the driver, no Spark job.
+files are new: :func:`screen` lists the folder (F2/F4) and removes
+the names already processed (F3, :184, :207) — the reference's own
+Python set difference, on the driver, no Spark job.
 
 The ledger of processed ids is the engine's only exactly-once
 protocol. The drive tick and the Airflow task bodies screen against it
@@ -37,47 +37,6 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-_EXT_MIME = {
-    ".csv": "text/csv",
-    ".json": "application/json",
-    ".parquet": "application/vnd.apache.parquet",
-    ".txt": "text/plain",
-    ".gz": "application/gzip",
-}
-
-
-def _mime_of(name: str) -> str:
-    return _EXT_MIME.get(os.path.splitext(name)[1].lower(), "application/octet-stream")
-
-
-def settled_files(
-    input_dir: str,
-    prefix: str = "",
-    min_age_seconds: float = 60.0,
-    now: float | None = None,
-    mime: str | None = "text/csv",
-) -> list[tuple[str, str, float]]:
-    """F2/F4: ``(file_id, path, mtime)`` of the regular files in
-    ``input_dir`` that pass the name-prefix and MIME predicates
-    (``mime=None``: any type) and the settle-age gate (reference
-    MIN_FILE_AGE_SECONDS, drive_auto_compress_email.py:71, :227-236;
-    ``float("-inf")``: no gate), sorted by name. Plain driver-side
-    metadata: no Spark job."""
-    now = time.time() if now is None else now
-    out = []
-    if os.path.isdir(input_dir):
-        for name in sorted(os.listdir(input_dir)):
-            path = os.path.join(input_dir, name)
-            if (
-                name.startswith(prefix)
-                and (mime is None or _mime_of(name) == mime)
-                and os.path.isfile(path)
-            ):
-                mtime = os.path.getmtime(path)
-                if now - mtime >= min_age_seconds:
-                    out.append((name, path, mtime))
-    return out
-
 
 def screen(
     input_dir: str,
@@ -86,13 +45,30 @@ def screen(
     min_age_seconds: float = 60.0,
     now: float | None = None,
 ) -> list[tuple[str, str, float]]:
-    """The CSV :func:`settled_files` triples whose name is not in
-    ``processed``: the files a tick has to take."""
-    return [
-        f
-        for f in settled_files(input_dir, prefix, min_age_seconds, now)
-        if f[0] not in processed
-    ]
+    """F2-F4: ``(file_id, path, mtime)`` of the files a tick has to
+    take, sorted by name: the regular ``.csv`` files (suffix in any
+    case) in ``input_dir`` whose name starts with ``prefix`` and is not
+    in ``processed``, past the settle-age gate (reference
+    MIN_FILE_AGE_SECONDS, drive_auto_compress_email.py:71, :227-236).
+    A name starting with ``_`` or ``.`` is skipped: Spark's reader
+    treats it as hidden and reads no row of it, even by explicit path.
+    Plain driver-side metadata: no Spark job."""
+    now = time.time() if now is None else now
+    out = []
+    if os.path.isdir(input_dir):
+        for name in sorted(os.listdir(input_dir)):
+            path = os.path.join(input_dir, name)
+            if (
+                name.startswith(prefix)
+                and not name.startswith(("_", "."))
+                and name.lower().endswith(".csv")
+                and name not in processed
+                and os.path.isfile(path)
+            ):
+                mtime = os.path.getmtime(path)
+                if now - mtime >= min_age_seconds:
+                    out.append((name, path, mtime))
+    return out
 
 
 def file_stat(path: str) -> tuple[int, int] | None:

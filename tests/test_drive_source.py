@@ -1,5 +1,6 @@
-"""Custom Python DataSource connector (S4/S5): listing with pushed
-prefix/MIME filters, page-sized partitions, chunked content read."""
+"""The Drive connector (S4/S5): driver-side listing with the
+reference's prefix/MIME filters over paginated files().list pages, and
+chunked media download, through the replay and live transports."""
 
 from __future__ import annotations
 
@@ -7,79 +8,10 @@ import os
 
 import pytest
 
-
-def _register(spark):
-    from airflow_loan_etl_pipeline_spark.sources.drive_source import (
-        FileListingDataSource,
-    )
-
-    spark.dataSource.register(FileListingDataSource)
-
-
-def test_listing_filters_and_paginates(spark, tmp_path):
-    _register(spark)
-    d = tmp_path / "landing"
-    d.mkdir()
-    for i in range(7):
-        (d / f"loan_{i}.csv").write_text(f"id\n{i}\n")
-    (d / "loan_extra.json").write_text("{}")
-    (d / "other.csv").write_text("id\n9\n")
-
-    df = (
-        spark.read.format("file_listing")
-        .option("path", str(d))
-        .option("prefix", "loan_")
-        .option("mime", "text/csv")
-        .option("page_size", "3")
-        .load()
-    )
-    rows = df.collect()
-    # prefix AND mime pushed down: other.csv and loan_extra.json excluded
-    assert sorted(r.name for r in rows) == [f"loan_{i}.csv" for i in range(7)]
-    assert all(r.mime == "text/csv" for r in rows)
-    assert all(r.size > 0 and r.modified > 0 for r in rows)
-    # pagination -> ceil(7/3) = 3 input partitions (parallel pages)
-    assert df.rdd.getNumPartitions() == 3
-
-
-def test_content_read_matches_bytes(spark, tmp_path):
-    _register(spark)
-    d = tmp_path / "payloads"
-    d.mkdir()
-    blob = os.urandom(4096) * 3  # multi-chunk-ish payload
-    (d / "loan_a.bin").write_bytes(blob)
-
-    df = (
-        spark.read.format("file_listing")
-        .option("path", str(d))
-        .option("prefix", "loan_")
-        .option("with_content", "true")
-        .load()
-    )
-    row = df.collect()[0]
-    assert bytes(row.content) == blob
-    assert row.size == len(blob)
-
-
-def test_empty_dir_yields_empty_frame(spark, tmp_path):
-    _register(spark)
-    d = tmp_path / "empty"
-    d.mkdir()
-    df = (
-        spark.read.format("file_listing").option("path", str(d)).load()
-    )
-    assert df.count() == 0
-
-
-def test_listing_readers_raise_on_missing_dir(tmp_path):
-    """A missing folder is an error, not an empty listing."""
-    from airflow_loan_etl_pipeline_spark.sources.drive_source import (
-        _ListingReader,
-    )
-
-    missing = {"path": str(tmp_path / "missing")}
-    with pytest.raises(FileNotFoundError):
-        _ListingReader(missing).partitions()
+from airflow_loan_etl_pipeline_spark.sources.drive_source import (
+    drive_transport,
+    list_drive_files,
+)
 
 
 def _write_drive_fixture(root) -> None:
@@ -134,72 +66,52 @@ def _write_drive_fixture(root) -> None:
     (root / "media" / "f4").write_bytes(b"id,amt\n4,400\n" * 100)
 
 
-def test_drive_api_replay_listing(spark, tmp_path):
-    """api=drive: files().list pagination with the reference's pushed
-    prefix/MIME filters (google_drive_download.py:84-97), replayed
-    from recorded fixtures — no network."""
-    _register(spark)
+def test_drive_api_replay_listing(tmp_path):
+    """files().list pagination with the reference's prefix/MIME filters
+    (google_drive_download.py:84-97), replayed from recorded fixtures —
+    no network, no Spark session."""
     rec = tmp_path / "drive_rec"
     _write_drive_fixture(rec)
-    rows = (
-        spark.read.format("file_listing")
-        .option("api", "drive")
-        .option("replay_dir", str(rec))
-        .option("prefix", "loan_")
-        .option("mime", "text/csv")
-        .load()
-        .orderBy("name")
-        .collect()
+    rows = list_drive_files(
+        drive_transport(replay_dir=str(rec)), prefix="loan_", mime="text/csv"
     )
-    assert [r.name for r in rows] == ["loan_a.csv", "loan_b.csv", "loan_c.csv"]
-    assert [r.path for r in rows] == ["drive://f1", "drive://f2", "drive://f4"]
-    assert rows[0].mime == "text/csv"
+    assert [r["name"] for r in rows] == ["loan_a.csv", "loan_b.csv", "loan_c.csv"]
+    assert [r["id"] for r in rows] == ["f1", "f2", "f4"]
+    assert [r["size"] for r in rows] == [10, 11, 12]
+    assert rows[0]["mime"] == "text/csv"
     # RFC3339 modifiedTime surfaced as epoch seconds
-    assert rows[1].modified > rows[0].modified
+    assert rows[1]["modified"] > rows[0]["modified"]
 
 
-def test_drive_api_replay_download_and_paging(spark, tmp_path):
-    """api=drive with content: chunked media download per file inside
-    the partition reader (MediaIoBaseDownload loop,
-    google_drive_download.py:125-147); page_size=1 re-pages the
-    recorded listing into one partition per file."""
-    _register(spark)
+def test_drive_api_replay_download_and_paging(tmp_path):
+    """Chunked media download per listed file (MediaIoBaseDownload
+    loop, google_drive_download.py:125-147), over a listing chained
+    across two recorded pages."""
     rec = tmp_path / "drive_rec2"
     _write_drive_fixture(rec)
-    df = (
-        spark.read.format("file_listing")
-        .option("api", "drive")
-        .option("replay_dir", str(rec))
-        .option("prefix", "loan_")
-        .option("page_size", "1")
-        .option("with_content", "true")
-        .load()
-    )
-    assert df.rdd.getNumPartitions() == 3
-    got = {r.name: bytes(r.content) for r in df.collect()}
+    transport = drive_transport(replay_dir=str(rec))
+    got = {
+        f["name"]: b"".join(transport.download(f["id"]))
+        for f in list_drive_files(transport, prefix="loan_")
+    }
+    assert sorted(got) == ["loan_a.csv", "loan_b.csv", "loan_c.csv"]
     assert got["loan_a.csv"] == b"id,amt\n1,100\n"
     assert got["loan_c.csv"] == b"id,amt\n4,400\n" * 100
 
 
-def test_drive_api_requires_replay_dir(spark):
-    _register(spark)
-    import pytest
-    from py4j.protocol import Py4JJavaError
-
-    with pytest.raises(Exception, match="replay_dir|PYTHON_DATA_SOURCE"):
-        (
-            spark.read.format("file_listing")
-            .option("api", "drive")
-            .load()
-            .collect()
-        )
+def test_drive_api_requires_replay_dir(monkeypatch):
+    monkeypatch.delenv("GOOGLE_APPLICATION_CREDENTIALS", raising=False)
+    with pytest.raises(ValueError, match="replay_dir.*folder_id"):
+        drive_transport()
+    with pytest.raises(ValueError, match="replay_dir.*folder_id"):
+        drive_transport(folder_id="folder123")
 
 
 def test_rfc3339_epoch_variants():
     """ADVICE r5: valid RFC3339 modifiedTime values without fractional
     seconds, or with a numeric offset, must parse — a hardcoded
-    '%.fZ' strptime raised ValueError inside the executor read path
-    and failed the whole partition."""
+    '%.fZ' strptime raised ValueError for the no-fraction form and
+    failed the whole listing."""
     from airflow_loan_etl_pipeline_spark.sources.drive_source import (
         _rfc3339_epoch,
     )
@@ -211,19 +123,13 @@ def test_rfc3339_epoch_variants():
 
 
 def test_drive_live_config_reaches_http_transport_offline():
-    """The live configuration (folder_id + credentials) must pass
-    option validation and route to the HTTP transport; offline (no
-    google-api-python-client installed) that transport raises its
-    documented RuntimeError pointing at the optional dependency —
-    proving the seam is wired without needing network."""
-    import pytest
-
-    from airflow_loan_etl_pipeline_spark.sources.drive_source import (
-        _DriveListingReader,
-    )
-
-    reader = _DriveListingReader(
-        {"folder_id": "folder123", "credentials": "/tmp/nonexistent.json"}
+    """The live configuration (folder_id + credentials) must route to
+    the HTTP transport; offline (no google-api-python-client
+    installed) that transport raises its documented RuntimeError
+    pointing at the optional dependency — proving the seam is wired
+    without needing network."""
+    transport = drive_transport(
+        folder_id="folder123", credentials="/tmp/nonexistent.json"
     )
     try:
         import googleapiclient  # noqa: F401
@@ -233,37 +139,28 @@ def test_drive_live_config_reaches_http_transport_offline():
     except ImportError:
         pass
     with pytest.raises(RuntimeError, match="google-api-python-client"):
-        list(reader.partitions())
+        list_drive_files(transport)
 
 
-def test_drive_replay_wins_over_live_config(spark, tmp_path):
+def test_drive_replay_wins_over_live_config(tmp_path):
     """When both replay_dir and a live configuration are set, replay
     must win — deterministic fixtures never silently fall through to
     the network."""
-    _register(spark)
     rec = tmp_path / "drive_rec3"
     _write_drive_fixture(rec)
-    rows = (
-        spark.read.format("file_listing")
-        .option("api", "drive")
-        .option("replay_dir", str(rec))
-        .option("folder_id", "would-hit-network")
-        .option("credentials", "/tmp/nonexistent.json")
-        .option("prefix", "loan_")
-        .option("mime", "text/csv")
-        .load()
-        .collect()
+    transport = drive_transport(
+        replay_dir=str(rec),
+        folder_id="would-hit-network",
+        credentials="/tmp/nonexistent.json",
     )
-    assert len(rows) == 3
+    assert len(list_drive_files(transport, prefix="loan_", mime="text/csv")) == 3
 
 
-def test_drive_api_live_listing(spark):
+def test_drive_api_live_listing():
     """LIVE Drive leg (green-or-skip, the MinIO pattern): runs only
     when the environment provides a real folder + service-account
     credentials + the google client libraries + network. Skips with
     the exact missing piece otherwise."""
-    import pytest
-
     folder = os.environ.get("SPARK_GRAFT_DRIVE_FOLDER_ID")
     creds = os.environ.get("SPARK_GRAFT_DRIVE_CREDENTIALS") or os.environ.get(
         "GOOGLE_APPLICATION_CREDENTIALS"
@@ -276,18 +173,9 @@ def test_drive_api_live_listing(spark):
         import googleapiclient  # noqa: F401
     except ImportError:
         pytest.skip("google-api-python-client not installed")
-    _register(spark)
-    df = (
-        spark.read.format("file_listing")
-        .option("api", "drive")
-        .option("folder_id", folder)
-        .option("credentials", creds)
-        .load()
-    )
-    rows = df.collect()
-    assert df.columns == ["path", "name", "size", "modified", "mime"]
+    rows = list_drive_files(drive_transport(folder_id=folder, credentials=creds))
     for r in rows:
-        assert r.path.startswith("drive://")
+        assert sorted(r) == ["id", "mime", "modified", "name", "size"]
 
 
 def test_drive_query_escapes_all_interpolated_operands():
@@ -443,3 +331,15 @@ def test_live_pagination_prefix_is_exact_client_side():
     assert [f["name"] for p in pages for f in p] == ["loan_1.csv"]
     q = t._svc.calls[0]["q"]
     assert "name contains 'loan_'" in q and "'folder' in parents" in q
+
+
+def test_live_listing_pushes_prefix_and_mime_into_q():
+    """list_drive_files hands its filters to the live transport, which
+    pushes both into the Drive ``q`` string (google_drive_download.py:
+    84-97), and still keeps only exact-prefix, exact-MIME files."""
+    other = {**_f("loan_2.json"), "mimeType": "application/json"}
+    t = _live_transport([{"files": [_f("loan_1.csv"), other, _f("my_loan_3.csv")]}])
+    rows = list_drive_files(t, prefix="loan_", mime="text/csv")
+    assert [r["id"] for r in rows] == ["id-loan_1.csv"]
+    q = t._svc.calls[0]["q"]
+    assert "name contains 'loan_'" in q and "mimeType = 'text/csv'" in q

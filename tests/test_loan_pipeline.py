@@ -1074,6 +1074,31 @@ def test_drive_tick_reads_file_names_holding_glob_characters(spark, tmp_path):
     assert run_drive_pipeline(spark, str(watch), work) == ([], None, None)
 
 
+def test_drive_tick_skips_hidden_file_names(spark, tmp_path):
+    """Spark reads no row of a file whose name starts with ``_`` or
+    ``.``, even by explicit path, so the screen skips such names: the
+    tick neither reports nor commits ``_a.csv``, and its totals are
+    those of the files it does take (it reported and committed
+    ``_a.csv`` without counting its rows, and the next tick was idle)."""
+    from airflow_loan_etl_pipeline_spark.plans.drive_pipeline import (
+        run_drive_pipeline,
+    )
+
+    watch = tmp_path / "watch"
+    watch.mkdir()
+    work = str(tmp_path / "work")
+    _write_loans(watch / "_a.csv", FILE_C)
+    _write_loans(watch / ".b.csv", FILE_D)
+    _write_loans(watch / "c.csv", FILE_B)
+
+    summaries, aggs, _h = run_drive_pipeline(spark, str(watch), work, prefix="")
+
+    assert [s["filename"] for s in summaries] == ["c.csv"]
+    assert _ledger_rows(os.path.join(work, "ledger")) == ["c.csv"]
+    assert sum(r["loan_count"] for r in aggs.collect()) == len(FILE_B)
+    assert run_drive_pipeline(spark, str(watch), work, prefix="") == ([], None, None)
+
+
 def test_update_ledger_keeps_first_processed_at(spark, tmp_path, monkeypatch):
     """``processed_at`` records the commit that first took each id: a
     later commit stamps only its new ids."""
@@ -1159,3 +1184,37 @@ print("OK")
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "OK" in out.stdout
+
+
+def test_get_spark_precedence_over_submitted_conf():
+    """The session's master and shuffle width come from the argument,
+    else ``SPARK_GRAFT_CPUS``, else what the deployment submitted
+    (``$PYSPARK_SUBMIT_ARGS`` here), else Spark's defaults; it forced
+    ``local[32]`` and 32 partitions over a submitted master. Runs in
+    subprocesses so the suite's shared session is untouched."""
+    import subprocess
+    import sys
+
+    code = """
+from airflow_loan_etl_pipeline_spark.session import get_spark
+spark = get_spark()
+print(spark.sparkContext.master, spark.conf.get("spark.sql.shuffle.partitions"))
+"""
+    submitted = "--master local[2] --conf spark.sql.shuffle.partitions=7 pyspark-shell"
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    env.update(PYSPARK_SUBMIT_ARGS=submitted, SPARK_GRAFT_DRIVER_MEM="1g")
+
+    def session_of(env):
+        out = subprocess.run(
+            [sys.executable, "-c", code],
+            capture_output=True,
+            text=True,
+            timeout=240,
+            env=env,
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        return out.stdout.split()[-2:]
+
+    assert session_of(env) == ["local[2]", "7"]
+    assert session_of({**env, "SPARK_GRAFT_CPUS": "3"}) == ["local[3]", "3"]

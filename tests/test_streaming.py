@@ -11,7 +11,7 @@ import time
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from airflow_loan_etl_pipeline_spark.streaming.file_source import settled_files
+from airflow_loan_etl_pipeline_spark.streaming.file_source import screen
 from airflow_loan_etl_pipeline_spark.streaming.windows import tumbling
 
 EVENTS_SCHEMA = T.StructType(
@@ -75,11 +75,11 @@ def test_settle_age_gate(spark, tmp_path):
     os.makedirs(land)
     _write_csv(f"{land}/loan_new.csv", ["L1,1.0"])
     now = time.time()
-    assert len(settled_files(land, prefix="loan_", min_age_seconds=3600, now=now)) == 0
-    assert len(settled_files(land, prefix="loan_", min_age_seconds=0, now=now)) == 1
+    assert len(screen(land, set(), prefix="loan_", min_age_seconds=3600, now=now)) == 0
+    assert len(screen(land, set(), prefix="loan_", min_age_seconds=0, now=now)) == 1
     # name predicate (F2)
     _write_csv(f"{land}/other.csv", ["L9,9.0"])
-    got = settled_files(land, prefix="loan_", min_age_seconds=0, now=now)
+    got = screen(land, set(), prefix="loan_", min_age_seconds=0, now=now)
     assert [file_id for file_id, _path, _mtime in got] == ["loan_new.csv"]
 
 
